@@ -55,14 +55,6 @@ object Bpe {
   private val charSplit =
     expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
 
-  /** All adjacent symbol pairs of `s` (overlaps included), as
-    * struct(lhs, rhs) — zip of the sequence with its own tail.
-    */
-  private val adjacentPairs = expr(
-    """zip_with(slice(s, 1, greatest(size(s) - 1, 0)),
-      |         slice(s, 2, greatest(size(s) - 1, 0)),
-      |         (a, b) -> named_struct('lhs', a, 'rhs', b))""".stripMargin)
-
   /** Adjacent pairs PLUS one (sym, null) marker struct per symbol
     * occurrence — one exploded stream that lets a single aggregation
     * pass produce both the pair counts (rhs non-null groups) and the

@@ -41,16 +41,25 @@ object LoopPar {
     math.max(1L, math.min(cur.toLong, (rows + rowsPer - 1) / rowsPer)).toInt
   }
 
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
+  /** Run `body` with session conf `overrides` in place. Each key's
+    * previous value is restored in a finally — or the key unset again
+    * when it was unset before.
+    */
+  def withConf[T](spark: SparkSession, overrides: (String, String)*)(body: => T): T = {
+    val before = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Derive the round parallelism from `rows` and run `body` under it. */
   def withLoopParallelism[T](spark: SparkSession, rows: Long)(body: => T): T =
-    withShufflePartitions(spark, loopPartitions(spark, rows))(body)
+    withConf(spark,
+      "spark.sql.shuffle.partitions" -> loopPartitions(spark, rows).toString)(body)
 
   /** Partition count for a CPU-heavy per-row map stage (codec loops,
     * JSON parsing) fed by a small/unsplittable source: `rows` divided by

@@ -109,7 +109,7 @@ case class LshBucketFloatExpr(child: Expression, numPlanes: Int)
   */
 case class SimilarityJoinRewrite() extends Rule[LogicalPlan] {
 
-  private def planes(plan: LogicalPlan): Int =
+  private def planes: Int =
     conf.getConfString(SimilarityRewrite.PlanesConf, "0").toInt
 
   private def cosinePair(e: Expression): Option[(Expression, Expression)] = e match {
@@ -121,7 +121,7 @@ case class SimilarityJoinRewrite() extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val p = planes(plan)
+    val p = planes
     if (p <= 0) return plan
     plan.transform {
       case j @ Join(left, right, Inner | Cross, Some(cond), _)

@@ -86,7 +86,7 @@ case class UpsertMergeRewrite() extends Rule[LogicalPlan] {
       // DELETE FROM t WHERE <keys> IN (<subquery>) — the data-driven
       // erasure shape ([[deleteInRoute]])
       case Project(projList, Filter(in: InSubquery, child)) =>
-        return deleteInRoute(wd, rel, lake, keys, projList, in, child)
+        return deleteInRoute(rel, lake, keys, projList, in, child)
       case _ => return None
     }
     if (mr.notMatchedBySourceInstructions.nonEmpty) return None
@@ -256,7 +256,7 @@ case class UpsertMergeRewrite() extends Rule[LogicalPlan] {
     * compound predicate, a correlated subquery, or a partial key falls
     * through to the positional plan.
     */
-  private def deleteInRoute(wd: WriteDelta, rel: DataSourceV2Relation,
+  private def deleteInRoute(rel: DataSourceV2Relation,
       lake: LakeTable, keys: Seq[String], projList: Seq[NamedExpression],
       in: InSubquery, child: LogicalPlan): Option[LogicalPlan] = {
     // the filter must sit directly on THIS table's row-id scan

@@ -4,7 +4,7 @@ import graft.QueryCaches.CacheOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.gf
-import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
+import graft.operators.{Dedup, LoopPar, Multimodal, Similarity, TextOps}
 import graft.sources.Tables
 
 /** Training-data pipeline queries: dedup (exact / n-gram Jaccard /
@@ -156,28 +156,15 @@ object DataOps {
       DedupStream.configuredCap(spark))
     val sink = s"d06_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-d06").toString
-    val beforeParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val beforeProvider = spark.conf.get(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val beforeChangelog = spark.conf.get(changelogKey, "false")
     // q69's tuned shape: per-batch cost is store lifecycles, not rows
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(changelogKey, "true")
-    val q =
-      try out.writeStream.format("memory").queryName(sink)
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
+      out.writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", beforeParts)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          beforeProvider)
-        spark.conf.set(changelogKey, beforeChangelog)
-      }
+    }
     q.awaitTermination()
     // batch tail identical to d02's: cross-bucket dedup, language join,
     // estimate from the carried signatures

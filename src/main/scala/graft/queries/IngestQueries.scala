@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryCaches.CacheOps
+import graft.operators.LoopPar
 import graft.sources.{MeasurementIngest, Tables}
 
 /** Driver-oracled CSV-ingest query (SURVEY.md §2 rows S1/P1/P2/P5).
@@ -248,7 +249,7 @@ object IngestQueries {
     // §2.5: repartition immediately after an unsplittable read).
     val o = Tables.load(spark, dir, "orders")
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice", $"o_custkey")
-    val spread = o.repartition(graft.operators.LoopPar.sizedPartitions(
+    val spread = o.repartition(LoopPar.sizedPartitions(
       spark, o.count(), rowsPerTask = 4096), $"o_orderkey")
     spread
       .select(format_string(
@@ -1853,12 +1854,8 @@ object IngestQueries {
     // shuffle.partitions (32 locally) and paid ~6× the tasks the data
     // needs across the 5 versions. Same fix as the streaming replay
     // queries: drop to 8 around start() (restored in finally).
-    def maintain(): Unit = {
-      val before = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try maintainInner()
-      finally spark.conf.set("spark.sql.shuffle.partitions", before)
-    }
+    def maintain(): Unit =
+      LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8")(maintainInner())
     def maintainInner(): Unit = {
       val q = spark.readStream
         .option("maxVersionsPerTrigger", "1")

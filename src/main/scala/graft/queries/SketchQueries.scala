@@ -4,7 +4,7 @@ import graft.QueryCaches.CacheOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.gf
-import graft.operators.{CountMin, Frequency, Hll, Kmv, TextOps}
+import graft.operators.{CountMin, Frequency, Hll, Kmv, LoopPar, TextOps}
 import graft.sources.Tables
 
 /** Cardinality / frequency sketch queries (h-series + the c05 corpus
@@ -309,33 +309,20 @@ object SketchQueries {
     val out = SketchStream.windowedDistinct(stream, k, windowDays = 90)
     val sink = s"q69_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-q69").toString
-    val beforeParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val beforeProvider = spark.conf.get(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val beforeChangelog = spark.conf.get(changelogKey, "false")
     // r12 A/B (medians of 3): 8 parts + snapshot ckpt 6.6 s → 4 parts
     // + CHANGELOG checkpointing 5.4 s. The cost is per-batch per-store
     // fixed work (RocksDB open/commit + snapshot upload), so fewer
     // stores than keys-ish (5 priorities → 4) and changelog (commit
     // ships the delta, not the full store) both bite; 2 parts REGRESSES
     // (6.8 s) — the timer-expiry loops then serialize on 2 cores.
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(changelogKey, "true")
-    val q =
-      try out.writeStream.format("memory").queryName(sink)
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
+      out.writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", beforeParts)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          beforeProvider)
-        spark.conf.set(changelogKey, beforeChangelog)
-      }
+    }
     q.awaitTermination()
     q69Batches = q.recentProgress.length
     spark.table(sink)

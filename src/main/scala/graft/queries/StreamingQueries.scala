@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.gf
-import graft.operators.Pyramid
+import graft.operators.{LoopPar, Pyramid}
 import graft.streaming.StreamJobs
 import graft.sources.Tables
 
@@ -189,14 +189,12 @@ object StreamingQueries {
     // data volume — run it at 8 state partitions instead of the batch
     // session's 32 (the stream snapshots the conf at start; restored
     // immediately after so batch queries are unaffected)
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try FunnelStream.funnelStream(stream, stages).writeStream
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      FunnelStream.funnelStream(stream, stages).writeStream
         .format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
     q.awaitTermination()
     spark.table(sink)
       .filter(col("user_id") =!= -1L)
@@ -245,14 +243,12 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1").parquet(replay)
     val sink = s"q108_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-q108").toString
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try StreamJobs.sq7ClickErrorLeftOuter(stream, stream).writeStream
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      StreamJobs.sq7ClickErrorLeftOuter(stream, stream).writeStream
         .format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
     q.awaitTermination()
     spark.table(sink)
       .filter(col("user_id") =!= -1L)
@@ -295,15 +291,13 @@ object StreamingQueries {
       .parquet(replay).as[Event]
     val sink = s"q49_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-q49").toString
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try stream.withWatermark("ts", "2 hours")
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      stream.withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark()
         .writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
     q.awaitTermination()
     spark.table(sink)
       .select(col("user_id"), col("event_type"),
@@ -329,7 +323,6 @@ object StreamingQueries {
     */
   def q53(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.KafkaSource
-    import graft.model.Schemas.Event
     val ev = events(spark, dir)
       .select(col("ts"), col("event_type"), col("user_id"), col("value"))
     val replay = s"/root/repo/target/q53_replay-${new java.io.File(dir).getName}"
@@ -353,13 +346,11 @@ object StreamingQueries {
       .agg(sum(col("n")).as("n_events"), sum(col("cents")).as("total_cents"))
     val sink = s"q53_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-q53").toString
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try daily.writeStream.format("memory").queryName(sink)
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      daily.writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
     q.awaitTermination()
     spark.table(sink)
       .filter(col("event_type") =!= "sentinel")
@@ -390,23 +381,14 @@ object StreamingQueries {
       .parquet(replay).as[Event]
     val sink = s"q62_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-q62").toString
-    val beforeParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val beforeProvider = spark.conf.get(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q =
-      try ProfileStream.profiles(stream).writeStream
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      ProfileStream.profiles(stream).writeStream
         .format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", beforeParts)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          beforeProvider)
-      }
+    }
     q.awaitTermination()
     spark.table(sink)
       .select(col("user_id"), col("total_events"), col("n_types"),
@@ -437,23 +419,14 @@ object StreamingQueries {
       .parquet(replay).as[Event]
     val sink = s"q54_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-q54").toString
-    val beforeParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val beforeProvider = spark.conf.get(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q =
-      try OrdinalStream.ordinals(stream).writeStream
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      OrdinalStream.ordinals(stream).writeStream
         .format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", beforeParts)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          beforeProvider)
-      }
+    }
     q.awaitTermination()
     spark.table(sink)
       .select(col("user_id"), col("seq"), col("ts_us"), col("event_type"),
@@ -569,13 +542,11 @@ object StreamingQueries {
         count(lit(1)).as("n_events"))
     val sink = s"q56_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt-q56").toString
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try sessions.writeStream.format("memory").queryName(sink)
+    val q = LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      sessions.writeStream.format("memory").queryName(sink)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
     q.awaitTermination()
     q56Batches = q.recentProgress.length
     spark.table(sink)

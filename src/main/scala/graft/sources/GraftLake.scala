@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -13,7 +12,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, Transform}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, GeneralAggregateFunc, Max, Min, Sum}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => VPredicate}
 import org.apache.spark.sql.connector.read._
@@ -284,6 +284,22 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
       schema: StructType,
       partitions: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
+    val props = definitionProps(schema, partitions, properties)
+    val dir = tableDir(ident)
+    if (LakeLog.currentSnapshot(dir).isDefined)
+      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
+    Files.createDirectories(dir.resolve("data"))
+    val s0 = LakeSnapshot(0L, schema, Seq.empty, props ++ LakeColIds.freshProps(schema))
+    LakeLog.commit(dir, expectedVersion = -1L, s0)
+    new LakeTable(dir, s0, None)
+  }
+
+  /** A new table definition's props (CREATE and CTAS/RTAS): the column
+    * types the codec writes, the allowlisted properties the caller
+    * passed (validated), and the encoded partition spec.
+    */
+  private def definitionProps(schema: StructType, partitions: Array[Transform],
+      properties: java.util.Map[String, String]): Map[String, String] = {
     schema.fields.foreach { f =>
       require(LakeCodec.supported(f.dataType),
         s"graftlake supports BIGINT/INT/DOUBLE/STRING/BOOLEAN columns; " +
@@ -296,19 +312,28 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
         "compact_when_dv_pct",
         "compression", "row_group_bytes").contains(k) ||
         k.startsWith(LakeConstraints.Prefix)).toMap
-    (Seq("clusterBy", "sortBy").flatMap(keep.get) ++
-      LakeTable.bloomCols(keep)).foreach(c =>
+    validateProps(schema, keep)
+    keep ++ partitionProps(schema, partitions)
+  }
+
+  /** The one table-property validator: CREATE, CTAS/RTAS and ALTER
+    * TABLE … SET TBLPROPERTIES all call it, so no path commits a value
+    * another path rejects. Bad values fail HERE because the writers,
+    * the checkpoint writer and compaction read them long after the DDL
+    * reported success.
+    */
+  private def validateProps(schema: StructType, props: Map[String, String]): Unit = {
+    (Seq("clusterBy", "sortBy").flatMap(props.get) ++
+      LakeTable.bloomCols(props)).foreach(c =>
       require(schema.fieldNames.contains(c),
         s"graftlake clusterBy/sortBy/bloomBy must name a table column, got '$c'"))
-    keep.get("mode").foreach(m => require(m == "cow" || m == "mor",
+    props.get("mode").foreach(m => require(m == "cow" || m == "mor",
       s"graftlake mode must be 'cow' or 'mor', got '$m'"))
-    keep.get("checkpoint_part_bytes").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: checkpoint_part_bytes must be a positive integer, got '$v'"))
-    keep.get("checkpoint_interval").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: checkpoint_interval must be a positive integer, got '$v'"))
-    keep.get("upsert_key").foreach { c =>
+    Seq("checkpoint_part_bytes", "checkpoint_interval", "target_file_bytes",
+      "compact_when_eq_records", "row_group_bytes").foreach(k =>
+      props.get(k).foreach(v => require(v.toLongOption.exists(_ > 0L),
+        s"graftlake: $k must be a positive integer, got '$v'")))
+    props.get("upsert_key").foreach { c =>
       val ks = LakeTable.upsertKeyCols(c)
       require(ks.nonEmpty && ks.forall(k =>
         schema.fields.exists(f => f.name == k &&
@@ -316,35 +341,17 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
             f.dataType == StringType))),
         s"graftlake: upsert_key must name integral or string table columns, got '$c'")
     }
-    keep.get("target_file_bytes").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: target_file_bytes must be a positive integer, got '$v'"))
-    keep.get("compact_when_eq_records").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: compact_when_eq_records must be a positive integer, got '$v'"))
-    keep.get("compact_when_dv_pct").foreach(v =>
+    props.get("compact_when_dv_pct").foreach(v =>
       require(v.toLongOption.exists(p => p >= 1L && p <= 100L),
         s"graftlake: compact_when_dv_pct must be a percentage in 1..100, got '$v'"))
-    keep.get("runtime_filter_cols").toSeq
+    props.get("runtime_filter_cols").toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).foreach(c =>
         require(schema.fieldNames.contains(c),
           s"graftlake runtime_filter_cols must name table columns, got '$c'"))
-    keep.get("compression").foreach(v =>
+    props.get("compression").foreach(v =>
       require(LakeParquet.Codecs.contains(v.toLowerCase),
         s"graftlake: unsupported compression '$v' " +
           s"(supported: ${LakeParquet.Codecs.keys.toSeq.sorted.mkString(", ")})"))
-    keep.get("row_group_bytes").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: row_group_bytes must be a positive integer, got '$v'"))
-    val partProps = partitionProps(schema, partitions)
-    val dir = tableDir(ident)
-    if (LakeLog.currentSnapshot(dir).isDefined)
-      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    Files.createDirectories(dir.resolve("data"))
-    val s0 = LakeSnapshot(0L, schema, Seq.empty,
-      keep ++ partProps ++ LakeColIds.freshProps(schema))
-    LakeLog.commit(dir, expectedVersion = -1L, s0)
-    new LakeTable(dir, s0, None)
   }
 
   /** Validate + encode `PARTITIONED BY` transforms (identity/bucket).
@@ -378,7 +385,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
       properties: java.util.Map[String, String]): StagedTable = {
     if (tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    staged(ident, schema, partitions, properties, replace = false, orCreate = false)
+    staged(ident, schema, partitions, properties, replace = false)
   }
 
   override def stageReplace(
@@ -386,71 +393,19 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
       properties: java.util.Map[String, String]): StagedTable = {
     if (!tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    staged(ident, schema, partitions, properties, replace = true, orCreate = false)
+    staged(ident, schema, partitions, properties, replace = true)
   }
 
   override def stageCreateOrReplace(
       ident: Identifier, schema: StructType, partitions: Array[Transform],
       properties: java.util.Map[String, String]): StagedTable =
-    staged(ident, schema, partitions, properties, replace = true, orCreate = true)
+    staged(ident, schema, partitions, properties, replace = true)
 
   private def staged(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: java.util.Map[String, String],
-      replace: Boolean, orCreate: Boolean): StagedTable = {
-    schema.fields.foreach { f =>
-      require(LakeCodec.supported(f.dataType),
-        s"graftlake supports BIGINT/INT/DOUBLE/STRING/BOOLEAN columns; " +
-          s"got ${f.name}: ${f.dataType.simpleString}")
-    }
-    val keep = properties.asScala.view.filterKeys(k => Set("clusterBy", "sortBy", "bloomBy", "bloom_inline", "mode",
-        "checkpoint_part_bytes", "checkpoint_interval", "runtime_filter_cols",
-        "target_file_bytes", "upsert_key", "compact_when_eq_records",
-        "compact_when_dv_pct",
-        "compression", "row_group_bytes").contains(k) ||
-        k.startsWith(LakeConstraints.Prefix)).toMap
-    (Seq("clusterBy", "sortBy").flatMap(keep.get) ++
-      LakeTable.bloomCols(keep)).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"graftlake clusterBy/sortBy/bloomBy must name a table column, got '$c'"))
-    keep.get("mode").foreach(m => require(m == "cow" || m == "mor",
-      s"graftlake mode must be 'cow' or 'mor', got '$m'"))
-    keep.get("checkpoint_part_bytes").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: checkpoint_part_bytes must be a positive integer, got '$v'"))
-    keep.get("checkpoint_interval").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: checkpoint_interval must be a positive integer, got '$v'"))
-    keep.get("upsert_key").foreach { c =>
-      val ks = LakeTable.upsertKeyCols(c)
-      require(ks.nonEmpty && ks.forall(k =>
-        schema.fields.exists(f => f.name == k &&
-          (f.dataType == LongType || f.dataType == IntegerType ||
-            f.dataType == StringType))),
-        s"graftlake: upsert_key must name integral or string table columns, got '$c'")
-    }
-    keep.get("target_file_bytes").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: target_file_bytes must be a positive integer, got '$v'"))
-    keep.get("compact_when_eq_records").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: compact_when_eq_records must be a positive integer, got '$v'"))
-    keep.get("compact_when_dv_pct").foreach(v =>
-      require(v.toLongOption.exists(p => p >= 1L && p <= 100L),
-        s"graftlake: compact_when_dv_pct must be a percentage in 1..100, got '$v'"))
-    keep.get("runtime_filter_cols").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).foreach(c =>
-        require(schema.fieldNames.contains(c),
-          s"graftlake runtime_filter_cols must name table columns, got '$c'"))
-    keep.get("compression").foreach(v =>
-      require(LakeParquet.Codecs.contains(v.toLowerCase),
-        s"graftlake: unsupported compression '$v' " +
-          s"(supported: ${LakeParquet.Codecs.keys.toSeq.sorted.mkString(", ")})"))
-    keep.get("row_group_bytes").foreach(v =>
-      require(v.toLongOption.exists(_ > 0L),
-        s"graftlake: row_group_bytes must be a positive integer, got '$v'"))
+      replace: Boolean): StagedTable =
     new GraftStagedTable(tableDir(ident), ident, schema,
-      keep ++ partitionProps(schema, partitions), replace, orCreate)
-  }
+      definitionProps(schema, partitions, properties), replace)
 
   /** SCHEMA EVOLUTION: add / rename / drop top-level columns as a pure
     * METADATA commit — no data file moves. Stable field ids
@@ -583,51 +538,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
             !set.property.startsWith("qe.") &&
             !set.property.startsWith(LakeConstraints.Prefix),
             s"graftlake: property ${set.property} is format-internal")
-          // reject a non-numeric bound HERE — the checkpoint writer
-          // reads it long after this commit reported success
-          if (set.property == "checkpoint_part_bytes")
-            require(set.value.toLongOption.exists(_ > 0L),
-              s"graftlake: checkpoint_part_bytes must be a positive " +
-                s"integer, got '${set.value}'")
-          if (set.property == "checkpoint_interval")
-            require(set.value.toLongOption.exists(_ > 0L),
-              s"graftlake: checkpoint_interval must be a positive " +
-                s"integer, got '${set.value}'")
-          if (set.property == "upsert_key") {
-            val ks = LakeTable.upsertKeyCols(set.value)
-            require(ks.nonEmpty && ks.forall(k =>
-              schema.fields.exists(f => f.name == k &&
-                (f.dataType == LongType || f.dataType == IntegerType ||
-                  f.dataType == StringType))),
-              s"graftlake: upsert_key must name integral or string " +
-                s"table columns, got '${set.value}'")
-          }
-          if (set.property == "target_file_bytes")
-            require(set.value.toLongOption.exists(_ > 0L),
-              s"graftlake: target_file_bytes must be a positive " +
-                s"integer, got '${set.value}'")
-          if (set.property == "compact_when_eq_records")
-            require(set.value.toLongOption.exists(_ > 0L),
-              s"graftlake: compact_when_eq_records must be a positive " +
-                s"integer, got '${set.value}'")
-          if (set.property == "compact_when_dv_pct")
-            require(set.value.toLongOption.exists(p => p >= 1L && p <= 100L),
-              s"graftlake: compact_when_dv_pct must be a percentage " +
-                s"in 1..100, got '${set.value}'")
-          if (set.property == "row_group_bytes")
-            require(set.value.toLongOption.exists(_ > 0L),
-              s"graftlake: row_group_bytes must be a positive " +
-                s"integer, got '${set.value}'")
-          if (set.property == "runtime_filter_cols")
-            set.value.split(',').map(_.trim).filter(_.nonEmpty).foreach(c =>
-              require(schema.fieldNames.contains(c),
-                s"graftlake runtime_filter_cols must name table columns, got '$c'"))
-          // reject an unknown codec HERE — the writer reads it inside a
-          // task long after this commit reported success
-          if (set.property == "compression")
-            require(LakeParquet.Codecs.contains(set.value.toLowerCase),
-              s"graftlake: unsupported compression '${set.value}' " +
-                s"(supported: ${LakeParquet.Codecs.keys.toSeq.sorted.mkString(", ")})")
+          validateProps(schema, Map(set.property -> set.value))
           props = props + (set.property -> set.value)
         case rm: TableChange.RemoveProperty =>
           require(!LakeTable.ReservedProps(rm.property) &&
@@ -1079,13 +990,22 @@ object LakeEq {
     */
   def encodeTuple(parts: Seq[Any]): String = {
     val sb = new java.lang.StringBuilder()
-    parts.foreach {
-      case l: Long => sb.append('L').append(l)
-      case s: String => sb.append('S').append(s.length).append(':').append(s)
-      case other => throw new IllegalArgumentException(
-        s"graftlake: unencodable tuple component $other")
-    }
+    parts.foreach(appendComponent(sb, _))
     sb.toString
+  }
+
+  /** An integral key column's value as a long (INT widens). */
+  def keyLong(row: InternalRow, idx: Int, dt: DataType): Long =
+    if (dt == IntegerType) row.getInt(idx).toLong else row.getLong(idx)
+
+  /** Append one component's encoding — the per-row decode side calls
+    * this with the values it reads, so both sides share one format.
+    */
+  def appendComponent(sb: java.lang.StringBuilder, part: Any): Unit = part match {
+    case l: Long => sb.append('L').append(l)
+    case s: String => sb.append('S').append(s.length).append(':').append(s)
+    case other => throw new IllegalArgumentException(
+      s"graftlake: unencodable tuple component $other")
   }
 }
 
@@ -1097,13 +1017,13 @@ object LakeEq {
   * like the single-column path. Tuples with any string component keep
   * the canonical [[LakeEq.encodeTuple]] HashSet (self-delimiting, so
   * encodings collide iff tuples are equal). Built once per task
-  * reader; `buf` is the caller's reusable component buffer (readers
-  * are single-threaded by contract).
+  * reader and probed through [[matches]]; its component buffer is
+  * reused across rows (readers are single-threaded by contract).
   */
 final class LakeTupleProbe(tuples: Seq[Seq[Any]]) {
-  val arity: Int = if (tuples.isEmpty) 0 else tuples.head.size
-  val allLong: Boolean = tuples.forall(_.forall(_.isInstanceOf[Long]))
-  val buf: Array[Long] = if (allLong) new Array[Long](arity) else null
+  private val arity: Int = if (tuples.isEmpty) 0 else tuples.head.size
+  private val allLong: Boolean = tuples.forall(_.forall(_.isInstanceOf[Long]))
+  private val buf: Array[Long] = if (allLong) new Array[Long](arity) else null
   private val mat: Array[Long] =
     if (!allLong) null
     else {
@@ -1133,8 +1053,29 @@ final class LakeTupleProbe(tuples: Seq[Seq[Any]]) {
       s
     }
 
+  /** Does `row`'s key tuple — the columns at `idxs`, read as `dts` —
+    * belong to the set? A null component never matches (SQL IN). The
+    * all-long path decodes into the reusable buffer and binary-searches
+    * the matrix, allocating nothing per row.
+    */
+  def matches(row: InternalRow, idxs: Array[Int], dts: Array[DataType]): Boolean = {
+    val sb = if (allLong) null else new java.lang.StringBuilder()
+    var j = 0
+    while (j < idxs.length) {
+      val idx = idxs(j)
+      if (row.isNullAt(idx)) return false
+      if (allLong) buf(j) = LakeEq.keyLong(row, idx, dts(j))
+      else LakeEq.appendComponent(sb, dts(j) match {
+        case IntegerType | LongType => LakeEq.keyLong(row, idx, dts(j))
+        case _ => row.getUTF8String(idx).toString
+      })
+      j += 1
+    }
+    if (allLong) containsLongs() else set.contains(sb.toString)
+  }
+
   /** All-long path: does the sorted matrix contain `buf`'s tuple? */
-  def containsLongs(): Boolean = {
+  private def containsLongs(): Boolean = {
     var lo = 0
     var hi = mat.length / arity - 1
     while (lo <= hi) {
@@ -1151,9 +1092,6 @@ final class LakeTupleProbe(tuples: Seq[Seq[Any]]) {
     }
     false
   }
-
-  /** String-bearing path: canonical-encoding membership. */
-  def containsEncoded(encoded: String): Boolean = set.contains(encoded)
 }
 
 /** Stable FIELD IDS — the column-mapping layer under `ALTER TABLE`.
@@ -1451,39 +1389,11 @@ final class LakePartedFiles(dir: Path, private[sources] val version: Long,
       if (integral && !parts.forall(_.cr.contains(id))) return None
       if (!parts.forall(_.nc.contains(id))) return None
       if (sketchable && !parts.forall(_.kv.contains(id))) return None
-      var lo = Long.MaxValue; var hi = Long.MinValue
-      var nulls = 0L; var haveMm = integral; var haveNulls = true
-      var haveKmv = sketchable
-      val kmvIn = Seq.newBuilder[Seq[Long]]
-      parts.foreach { pm =>
-        pm.cr.get(id).foreach { case (l, h) =>
-          lo = math.min(lo, l); hi = math.max(hi, h) }
-        nulls += pm.nc(id)
-        pm.kv.get(id).foreach(kmvIn += _)
-      }
-      adds.foreach { f =>
-        LakeColIds.physicalName(cols, f, fd.name) match {
-          case None => nulls += f.rows // predates the column
-          case Some(p) =>
-            f.nulls.get(p) match {
-              case Some(nn) => nulls += nn
-              case None => haveNulls = false
-            }
-            f.stats.get(p) match {
-              case Some((l, h)) => lo = math.min(lo, l); hi = math.max(hi, h)
-              case None =>
-                if (!f.nulls.get(p).contains(f.rows)) haveMm = false
-            }
-            f.kmv.get(p) match {
-              case Some(hs) => kmvIn += hs
-              case None => haveKmv = false
-            }
-        }
-      }
-      (fd.name,
-        if (haveMm && lo <= hi) Some((lo, hi)) else None,
-        if (haveNulls) Some(nulls) else None,
-        if (haveKmv) LakeParquet.kmvEstimate(kmvIn.result()) else None)
+      val fold = new LakeColumnFold(fd)
+      parts.foreach(pm => fold.addSummary(pm.cr.get(id), pm.nc(id), pm.kv.get(id)))
+      adds.foreach(fold.addFile(cols, _))
+      val (mm, nulls, ndv) = fold.result()
+      (fd.name, mm, nulls, ndv)
     }
     Some(out)
   }
@@ -2165,22 +2075,37 @@ object LakeLog {
     }
     Files.createDirectories(logDir(dir))
     if (publish(dir, versionFile(dir, v), root)) {
-      val interval = props.get("checkpoint_interval")
-        .flatMap(_.toLongOption).filter(_ > 0L).getOrElse(CheckpointInterval.toLong)
-      if (v > 0L && v % interval == 0L) {
-        // reconstruct the just-published version LAZILY from the log —
-        // the incremental checkpoint planner never parses untouched
-        // parts, so the cadence cost is O(changed parts) too
-        try snapshotAt(dir, v).foreach(checkpoint(dir, _))
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            recordCheckpointFailure(dir, v, e)
-            System.err.println(
-              s"graftlake: checkpoint at v$v failed (commit unaffected): $e")
-        }
-      }
+      // reconstruct the just-published version LAZILY from the log —
+      // the incremental checkpoint planner never parses untouched
+      // parts, so the cadence cost is O(changed parts) too
+      cadenceCheckpoint(dir, v, props)(snapshotAt(dir, v))
       true
     } else false
+  }
+
+  /** Post-publish checkpoint CADENCE. Cadence is a TABLE property: a
+    * streaming table committing every few seconds wants tight delta
+    * chains (cheap with part reuse), a bulk-load table fewer
+    * checkpoints; the default is [[CheckpointInterval]]. Best-effort:
+    * the version file IS the commit — a checkpoint is a pure read
+    * optimization (recomputable from deltas), so a failure here must
+    * never report a COMMITTED write as failed (a retry would then
+    * duplicate it). `snap` is the published version to checkpoint,
+    * built only when the cadence fires.
+    */
+  private def cadenceCheckpoint(dir: Path, v: Long, props: Map[String, String])(
+      snap: => Option[LakeSnapshot]): Unit = {
+    val interval = props.get("checkpoint_interval")
+      .flatMap(_.toLongOption).filter(_ > 0L).getOrElse(CheckpointInterval.toLong)
+    if (v > 0L && v % interval == 0L) {
+      try snap.foreach(checkpoint(dir, _))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          recordCheckpointFailure(dir, v, e)
+          System.err.println(
+            s"graftlake: checkpoint at v$v failed (commit unaffected): $e")
+      }
+    }
   }
 
   def commit(dir: Path, expectedVersion: Long, snapshot: LakeSnapshot,
@@ -2236,20 +2161,10 @@ object LakeLog {
         }
         Files.createDirectories(logDir(dir))
         return if (publish(dir, versionFile(dir, snapshot.version), root)) {
-          val interval = snapshot.props.get("checkpoint_interval")
-            .flatMap(_.toLongOption).filter(_ > 0L).getOrElse(CheckpointInterval.toLong)
-          if (snapshot.version > 0L && snapshot.version % interval == 0L) {
-            // reconstruct the published version LAZILY (commitAppend's
-            // cadence shape) — incremental part reuse stays O(changed)
-            try snapshotAt(dir, snapshot.version).foreach(checkpoint(dir, _))
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                recordCheckpointFailure(dir, snapshot.version, e)
-                System.err.println(
-                  s"graftlake: checkpoint at v${snapshot.version} failed " +
-                    s"(commit unaffected): $e")
-            }
-          }
+          // reconstruct the published version LAZILY (commitAppend's
+          // cadence shape) — incremental part reuse stays O(changed)
+          cadenceCheckpoint(dir, snapshot.version, snapshot.props)(
+            snapshotAt(dir, snapshot.version))
           true
         } else false
       case _ => ()
@@ -2308,28 +2223,10 @@ object LakeLog {
 
     Files.createDirectories(logDir(dir))
     if (publish(dir, versionFile(dir, snapshot.version), root)) {
-      // cadence is a TABLE property: a streaming table committing every
-      // few seconds wants tight delta chains (cheap with part reuse), a
-      // bulk-load table fewer checkpoints; default = CheckpointInterval
-      val interval = snapshot.props.get("checkpoint_interval")
-        .flatMap(_.toLongOption).filter(_ > 0L).getOrElse(CheckpointInterval.toLong)
-      if (snapshot.version > 0L && snapshot.version % interval == 0L) {
-        // best-effort: the version file above IS the commit — a
-        // checkpoint is a pure read optimization (recomputable from
-        // deltas), so a failure here must never report a COMMITTED
-        // write as failed (a retry would then duplicate it). The
-        // STAMPED view checkpoints (birth seqs + derived eqdels), not
-        // the caller's in-memory snapshot
-        try checkpoint(dir, LakeSnapshot(snapshot.version, snapshot.schema,
-          stamped, snapshot.props, liveEq))
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            recordCheckpointFailure(dir, snapshot.version, e)
-            System.err.println(
-              s"graftlake: checkpoint at v${snapshot.version} failed " +
-                s"(commit unaffected): $e")
-        }
-      }
+      // the STAMPED view checkpoints (birth seqs + derived eqdels), not
+      // the caller's in-memory snapshot
+      cadenceCheckpoint(dir, snapshot.version, snapshot.props)(
+        Some(LakeSnapshot(snapshot.version, snapshot.schema, stamped, snapshot.props, liveEq)))
       true
     } else false
   }
@@ -3121,6 +3018,13 @@ object LakeTable {
     declared.distinct.filter(schema.fieldNames.contains)
   }
 
+  /** The declared clustering every write lays rows out by: the
+    * partition source columns plus `clusterBy`. Clustering on the
+    * partition sources keeps each write task's open-file set small.
+    */
+  def clusterCols(props: Map[String, String]): Seq[String] =
+    (LakePartitioning.decode(props).map(_.col) ++ props.get("clusterBy")).distinct
+
   /** `target_file_bytes`: the write-side ADVISORY shuffle-partition
     * size ([[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering#advisoryPartitionSizeInBytes]])
     * — AQE sizes the layout shuffle's partitions toward this many
@@ -3552,23 +3456,10 @@ class LakeRowLevelOperation(dir: Path, snapshot: LakeSnapshot,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write = new Write with RequiresDistributionAndOrdering {
-        // rewritten files keep the table's declared clustering/order —
-        // a COW rewrite must not silently degrade the layout appends
-        // were forced to satisfy
-        import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-        import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder}
-        override def requiredDistribution(): Distribution =
-          snapshot.props.get("clusterBy")
-            .map(c => Distributions.clustered(
-              Array[VExpression](Expressions.identity(c)): Array[VExpression]))
-            .getOrElse(Distributions.unspecified())
-        override def requiredOrdering(): Array[SortOrder] =
-          snapshot.props.get("sortBy")
-            .map(c => Array(Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)))
-            .getOrElse(Array.empty)
-        override def advisoryPartitionSizeInBytes(): Long =
-          LakeTable.targetFileBytes(snapshot.props)
+      // rewritten files keep the table's declared layout — a COW
+      // rewrite must not silently degrade the layout appends were
+      // forced to satisfy
+      override def build(): Write = new LakeLayoutWrite(snapshot.props) {
         override def description(): String = s"graftlake-replace-$cmd"
         override def toBatch: BatchWrite = new BatchWrite {
           override def createBatchWriterFactory(pi: PhysicalWriteInfo): DataWriterFactory =
@@ -3611,6 +3502,57 @@ class LakeRowLevelOperation(dir: Path, snapshot: LakeSnapshot,
         }
       }
     }
+}
+
+/** The per-column ESTIMATOR fold behind `LakeScan.columnStats`, the
+  * `__stats` metadata table and the checkpoint manifest's census:
+  * integral min/max across files, summed null counts, and a KMV-merged
+  * NDV (strings sketch too). Each stat is reported only when every
+  * input covers it; a file that predates the column contributes `rows`
+  * nulls, and an all-null file legitimately carries no min/max.
+  */
+final class LakeColumnFold(fd: StructField) {
+  private val integral = fd.dataType == LongType || fd.dataType == IntegerType
+  private var lo = Long.MaxValue
+  private var hi = Long.MinValue
+  private var nulls = 0L
+  private var haveMm = integral
+  private var haveNulls = true
+  private var haveKmv = integral || fd.dataType == StringType
+  private val kmvIn = Seq.newBuilder[Seq[Long]]
+
+  /** A checkpoint part's pre-folded summary of the column. */
+  def addSummary(range: Option[(Long, Long)], nullCount: Long,
+      kmv: Option[Seq[Long]]): Unit = {
+    range.foreach { case (l, h) => lo = math.min(lo, l); hi = math.max(hi, h) }
+    nulls += nullCount
+    kmv.foreach(kmvIn += _)
+  }
+
+  /** One data file, resolved through its physical name for the column. */
+  def addFile(cols: Seq[(String, Long)], f: LakeFile): Unit =
+    LakeColIds.physicalName(cols, f, fd.name) match {
+      case None => nulls += f.rows // predates the column
+      case Some(p) =>
+        f.nulls.get(p) match {
+          case Some(nn) => nulls += nn
+          case None => haveNulls = false
+        }
+        f.stats.get(p) match {
+          case Some((l, h)) => lo = math.min(lo, l); hi = math.max(hi, h)
+          case None => if (!f.nulls.get(p).contains(f.rows)) haveMm = false
+        }
+        f.kmv.get(p) match {
+          case Some(hs) => kmvIn += hs
+          case None => haveKmv = false
+        }
+    }
+
+  /** (min/max, null count, NDV) — each None when coverage is incomplete. */
+  def result(): (Option[(Long, Long)], Option[Long], Option[Long]) =
+    (if (haveMm && lo <= hi) Some((lo, hi)) else None,
+      if (haveNulls) Some(nulls) else None,
+      if (haveKmv) LakeParquet.kmvEstimate(kmvIn.result()) else None)
 }
 
 /** Per-file stats decisions for a predicate conjunction. */
@@ -4246,6 +4188,29 @@ class LakeScanBuilder(dir: Path, snapshot: LakeSnapshot,
           org.apache.spark.unsafe.types.UTF8String.fromString).orNull)
       else minMax(fs, fd, isMin).map(_.map(x =>
         if (fd.dataType == IntegerType) Int.box(x.toInt) else Long.box(x)).orNull)
+    // (sum, non-null count) from the writer's recorded per-file sums
+    // (wrapping adds — the same arithmetic a non-ANSI scan-side sum
+    // performs). A dv'd file refuses (deleted rows' contribution is
+    // unknowable); era-missing columns contribute nothing; pre-field
+    // log entries pass only when provably all-null.
+    def exactSum(fs: Seq[LakeFile], fd: StructField): Option[(Long, Long)] = {
+      if (fd.dataType != LongType && fd.dataType != IntegerType) return None
+      var total = 0L
+      var nonNull = 0L
+      fs.foreach { f =>
+        phys(f, fd.name).foreach { p =>
+          if (f.dvRows != 0L) return None
+          f.sums.get(p) match {
+            case Some(sv) =>
+              total += sv
+              nonNull += f.rows - f.nulls.getOrElse(p, return None)
+            case None =>
+              if (!f.nulls.get(p).contains(f.rows)) return None
+          }
+        }
+      }
+      Some((total, nonNull))
+    }
     def aggValues(fs: Seq[LakeFile], collect: Option[Seq[StructField] => Unit]): Option[Seq[Any]] = {
       val fields = Seq.newBuilder[StructField]
       val values = Seq.newBuilder[Any]
@@ -4269,28 +4234,9 @@ class LakeScanBuilder(dir: Path, snapshot: LakeSnapshot,
           fields += StructField(s"max(${fd.name})", fd.dataType, nullable = true)
           values += v
         case su: Sum if !su.isDistinct =>
-          // the writer's recorded per-file sums (wrapping adds — the
-          // same arithmetic a non-ANSI scan-side sum performs). A dv'd
-          // file refuses (deleted rows' contribution is unknowable);
-          // era-missing columns contribute nothing; pre-field log
-          // entries pass only when provably all-null. SQL SUM over
-          // zero non-null values is NULL, so non-null counts ride along.
+          // SQL SUM over zero non-null values is NULL
           val fd = fieldOf(su.column).getOrElse(return None)
-          if (fd.dataType != LongType && fd.dataType != IntegerType) return None
-          var total = 0L
-          var nonNull = 0L
-          fs.foreach { f =>
-            phys(f, fd.name).foreach { p =>
-              if (f.dvRows != 0L) return None
-              f.sums.get(p) match {
-                case Some(sv) =>
-                  total += sv
-                  nonNull += f.rows - f.nulls.getOrElse(p, return None)
-                case None =>
-                  if (!f.nulls.get(p).contains(f.rows)) return None
-              }
-            }
-          }
+          val (total, nonNull) = exactSum(fs, fd).getOrElse(return None)
           fields += StructField(s"sum(${fd.name})", LongType, nullable = true)
           values += (if (nonNull == 0L) null else Long.box(total))
         case g: GeneralAggregateFunc
@@ -4301,21 +4247,7 @@ class LakeScanBuilder(dir: Path, snapshot: LakeSnapshot,
           // 2^53 (no longer exactly representable — the scan decides)
           // or any file carries a dv / unknown nulls, same as SUM.
           val fd = fieldOf(g.children()(0)).getOrElse(return None)
-          if (fd.dataType != LongType && fd.dataType != IntegerType) return None
-          var total = 0L
-          var nonNull = 0L
-          fs.foreach { f =>
-            phys(f, fd.name).foreach { p =>
-              if (f.dvRows != 0L) return None
-              f.sums.get(p) match {
-                case Some(sv) =>
-                  total += sv
-                  nonNull += f.rows - f.nulls.getOrElse(p, return None)
-                case None =>
-                  if (!f.nulls.get(p).contains(f.rows)) return None
-              }
-            }
-          }
+          val (total, nonNull) = exactSum(fs, fd).getOrElse(return None)
           if (math.abs(total) > (1L << 53)) return None
           fields += StructField(s"avg(${fd.name})", DoubleType, nullable = true)
           values += (if (nonNull == 0L) null
@@ -4815,7 +4747,7 @@ class LakeScan(dir: Path, tableSchema: StructType, props: Map[String, String],
     * cannot judge). Residual pushed predicates AND runtime IN sets both
     * qualify — the same algebra that skipped files skips groups.
     */
-  private def rgPredsFor(f: LakeFile, renames: Map[String, String]): Seq[VPredicate] =
+  private def rgPredsFor(renames: Map[String, String]): Seq[VPredicate] =
     if (onPlanned.isDefined ||
         required.fieldNames.contains(LakeTable.PosColumn)) Seq.empty
     else (rgPreds ++ runtimePreds).filter(_.references().forall(r =>
@@ -4848,7 +4780,7 @@ class LakeScan(dir: Path, tableSchema: StructType, props: Map[String, String],
     def input(f: LakeFile): LakeInputFile = {
       val renames = renameFor(f)
       LakeInputFile(dir.toString, f.path, f.rows, f.dv, renames,
-        typesFor(f), rgPredsFor(f, renames),
+        typesFor(f), rgPredsFor(renames),
         seq = f.seq, eqCols = eqColsFor(f))
     }
     if (fields.isEmpty)
@@ -4886,8 +4818,7 @@ class LakeScan(dir: Path, tableSchema: StructType, props: Map[String, String],
     * the sort key. Key-grouped mode concatenates files per tuple, which
     * breaks the order — no claim there unless each group is one file.
     */
-  override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.SortDirection
+  override def outputOrdering(): Array[SortOrder] = {
     val sb = props.get("sortBy").toSeq
     val ok = sb.nonEmpty &&
       sb.forall(required.fieldNames.contains) &&
@@ -4975,54 +4906,22 @@ class LakeScan(dir: Path, tableSchema: StructType, props: Map[String, String],
       val out = new java.util.HashMap[NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
       required.fields.foreach { fd =>
-        val integral = fd.dataType == LongType || fd.dataType == IntegerType
         if (fd.name != LakeTable.FileColumn && fd.name != LakeTable.PosColumn) {
-          var lo = Long.MaxValue; var hi = Long.MinValue
-          var nulls = 0L; var haveMm = integral; var haveNulls = true
-          // NDV: merge per-file KMV sketches; report only when EVERY
-          // planned file records one (or provably predates the column
-          // — zero distinct values). Dv'd files over-approximate, like
-          // min/max — estimator-grade, never result-grade. Strings
-          // sketch too (their UTF-8 bytes): distinctCount is wanted
-          // most exactly where min/max stats cannot exist.
-          var haveKmv = integral || fd.dataType == StringType
-          val kmvIn = Seq.newBuilder[Seq[Long]]
-          ps.foreach { f =>
-            LakeColIds.physicalName(curCols, f, fd.name) match {
-              case None => nulls += f.rows // predates the column
-              case Some(p) =>
-                f.nulls.get(p) match {
-                  case Some(nn) => nulls += nn
-                  case None => haveNulls = false
-                }
-                f.stats.get(p) match {
-                  case Some((l, h)) => lo = math.min(lo, l); hi = math.max(hi, h)
-                  case None =>
-                    // all-null files legitimately carry no stats
-                    if (!f.nulls.get(p).contains(f.rows)) haveMm = false
-                }
-                f.kmv.get(p) match {
-                  case Some(hs) => kmvIn += hs
-                  case None => haveKmv = false
-                }
-            }
-          }
-          val ndv: Option[Long] =
-            if (haveKmv) LakeParquet.kmvEstimate(kmvIn.result()) else None
-          if (haveMm || haveNulls || ndv.isDefined) {
-            val mm = haveMm && lo <= hi
+          val fold = new LakeColumnFold(fd)
+          ps.foreach(fold.addFile(curCols, _))
+          val (mm, nulls, ndv) = fold.result()
+          if (mm.isDefined || nulls.isDefined || ndv.isDefined) {
             def box(v: Long): Object =
               if (fd.dataType == IntegerType) Int.box(v.toInt) else Long.box(v)
-            val nc = nulls
             out.put(Expressions.column(fd.name),
               new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
                 override def min(): java.util.Optional[Object] =
-                  if (mm) java.util.Optional.of(box(lo)) else java.util.Optional.empty()
+                  java.util.Optional.ofNullable(mm.map(v => box(v._1)).orNull)
                 override def max(): java.util.Optional[Object] =
-                  if (mm) java.util.Optional.of(box(hi)) else java.util.Optional.empty()
+                  java.util.Optional.ofNullable(mm.map(v => box(v._2)).orNull)
                 override def nullCount(): java.util.OptionalLong =
-                  if (haveNulls) java.util.OptionalLong.of(nc)
-                  else java.util.OptionalLong.empty()
+                  nulls.map(java.util.OptionalLong.of)
+                    .getOrElse(java.util.OptionalLong.empty())
                 override def distinctCount(): java.util.OptionalLong =
                   ndv.map(java.util.OptionalLong.of)
                     .getOrElse(java.util.OptionalLong.empty())
@@ -5090,6 +4989,38 @@ case class LakeEqData(seq: Long, colId: Long, longs: Seq[Long], strs: Seq[String
     cols: Seq[(Long, String)] = Seq.empty,
     tuples: Seq[Seq[Any]] = Seq.empty)
 
+/** One data file's compiled equality-delete records. Single-column
+  * records merge per key column into a sorted long array or a string
+  * set; each composite record probes its [[LakeTupleProbe]]. Column
+  * indices address the row the reader decodes.
+  */
+final class LakeEqFilter(
+    singles: Array[(Int, DataType, Array[Long], java.util.HashSet[String])],
+    tuples: Array[(Array[Int], Array[DataType], LakeTupleProbe)]) {
+  val isEmpty: Boolean = singles.isEmpty && tuples.isEmpty
+
+  /** Does some record delete `row`? A null key never matches (SQL IN). */
+  def deletes(row: InternalRow): Boolean = {
+    var i = 0
+    while (i < singles.length) {
+      val (idx, dt, longs, strs) = singles(i)
+      if (!row.isNullAt(idx) && (
+          if (strs.isEmpty)
+            java.util.Arrays.binarySearch(longs, LakeEq.keyLong(row, idx, dt)) >= 0
+          else strs.contains(row.getUTF8String(idx).toString)))
+        return true
+      i += 1
+    }
+    var t = 0
+    while (t < tuples.length) {
+      val (idxs, dts, probe) = tuples(t)
+      if (probe.matches(row, idxs, dts)) return true
+      t += 1
+    }
+    false
+  }
+}
+
 case class LakeReaderFactory(tableSchema: StructType,
     required: Array[(String, DataType)], columnar: Boolean,
     eqData: Seq[LakeEqData] = Seq.empty)
@@ -5123,6 +5054,41 @@ case class LakeReaderFactory(tableSchema: StructType,
       override def close(): Unit = if (cur != null) { cur.close(); cur = null }
     }
 
+  /** The EQUALITY-DELETE anti-join for file `p`, shared by both read
+    * paths: records born after the file whose key columns it physically
+    * holds (a composite record needs every component; a file predating
+    * one holds only nulls there, so no row of it can match). Key columns
+    * decode even when the projection never asked for them — appended
+    * AFTER `base`, the projected physical columns, so indices into
+    * `base` stay stable. Returns the physical columns to decode and the
+    * filter over rows laid out in that order.
+    */
+  private def eqFilter(p: LakeInputFile, base: Seq[String]): (Seq[String], LakeEqFilter) = {
+    val singleRecs: Seq[(LakeEqCol, LakeEqData)] = p.eqCols.flatMap(c =>
+      eqData.filter(e => e.cols.isEmpty && e.colId == c.colId && e.seq > p.seq)
+        .map(c -> _))
+    val tupleRecs: Seq[(Seq[LakeEqCol], LakeEqData)] =
+      eqData.filter(e => e.cols.nonEmpty && e.seq > p.seq).flatMap { e =>
+        val comps = e.cols.map { case (id, _) => p.eqCols.find(_.colId == id) }
+        if (comps.exists(_.isEmpty)) None else Some((comps.map(_.get), e))
+      }
+    val keyCols = (singleRecs.map(_._1) ++ tupleRecs.flatMap(_._1)).distinct
+    val decodedPhys = base ++ keyCols.map(_.phys).filterNot(base.contains)
+    val singles = keyCols.filter(c => singleRecs.exists(_._1 == c)).map { c =>
+      val ds = singleRecs.collect { case (cc, e) if cc == c => e }
+      val strs = new java.util.HashSet[String]()
+      ds.flatMap(_.strs).foreach(strs.add)
+      (decodedPhys.indexOf(c.phys), LakeParquet.typeOf(c.fileType),
+        ds.flatMap(_.longs).distinct.sorted.toArray, strs)
+    }.toArray
+    val tuples = tupleRecs.map { case (cs, e) =>
+      (cs.map(c => decodedPhys.indexOf(c.phys)).toArray,
+        cs.map(c => LakeParquet.typeOf(c.fileType)).toArray,
+        new LakeTupleProbe(e.tuples))
+    }.toArray
+    (decodedPhys, new LakeEqFilter(singles, tuples))
+  }
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     partition match {
       case g: LakeGroupedInput => return concat(g.files, createReader)
@@ -5149,98 +5115,8 @@ case class LakeReaderFactory(tableSchema: StructType,
       p.fileTypes.get(n).map(LakeParquet.typeOf).getOrElse(dt) }
     val physical = required.collect {
       case (n, _) if p.rename.contains(n) => p.rename(n) }
-    // EQUALITY-DELETE filters applying to this file (records born
-    // after it whose key column it physically holds): the key decodes
-    // even when the projection never asked for it — appended AFTER the
-    // projected columns so `codes` indices stay stable — and matching
-    // rows are skipped exactly like dv positions
-    val eqApplicable: Seq[(LakeEqCol, LakeEqData)] = p.eqCols.flatMap(c =>
-      eqData.filter(e => e.cols.isEmpty && e.colId == c.colId && e.seq > p.seq)
-        .map(c -> _))
-    // COMPOSITE records applying here: every component must resolve in
-    // this file (a file predating any component holds only nulls there
-    // — no row of it can match the tuple)
-    val eqTupleRecs: Seq[(Seq[LakeEqCol], LakeEqData)] =
-      eqData.filter(e => e.cols.nonEmpty && e.seq > p.seq).flatMap { e =>
-        val comps = e.cols.map { case (id, _) => p.eqCols.find(_.colId == id) }
-        if (comps.exists(_.isEmpty)) None else Some((comps.map(_.get), e))
-      }
-    val eqKeyCols: Seq[LakeEqCol] =
-      (eqApplicable.map(_._1) ++ eqTupleRecs.flatMap(_._1)).distinct
-    val decodedPhys: Seq[String] = physical.toSeq ++
-      eqKeyCols.map(_.phys).filterNot(physical.contains)
-    val eqEvals: Array[(Int, DataType, Array[Long], java.util.HashSet[String])] =
-      eqKeyCols.filter(c => eqApplicable.exists(_._1 == c)).map { c =>
-        val ds = eqApplicable.collect { case (cc, e) if cc == c => e }
-        val strs = new java.util.HashSet[String]()
-        ds.flatMap(_.strs).foreach(strs.add)
-        (decodedPhys.indexOf(c.phys), LakeParquet.typeOf(c.fileType),
-          ds.flatMap(_.longs).distinct.sorted.toArray, strs)
-      }.toArray
-    val eqTupleEvals: Array[(Array[Int], Array[DataType], LakeTupleProbe)] =
-      eqTupleRecs.map { case (cs, e) =>
-        (cs.map(c => decodedPhys.indexOf(c.phys)).toArray,
-          cs.map(c => LakeParquet.typeOf(c.fileType)).toArray,
-          new LakeTupleProbe(e.tuples))
-      }.toArray
-    val eqNone = eqEvals.isEmpty && eqTupleEvals.isEmpty
-    def eqDead(src: InternalRow): Boolean = {
-      var i = 0
-      while (i < eqEvals.length) {
-        val (idx, dt, longs, strs) = eqEvals(i)
-        if (!src.isNullAt(idx)) { // SQL IN: null never matches
-          val hit =
-            if (strs.isEmpty) {
-              val v = dt match {
-                case IntegerType => src.getInt(idx).toLong
-                case _ => src.getLong(idx)
-              }
-              java.util.Arrays.binarySearch(longs, v) >= 0
-            } else strs.contains(src.getUTF8String(idx).toString)
-          if (hit) return true
-        }
-        i += 1
-      }
-      var t = 0
-      while (t < eqTupleEvals.length) {
-        val (idxs, dts, probe) = eqTupleEvals(t)
-        if (probe.allLong) {
-          // primitive path: components land in the probe's reusable
-          // buffer, membership is a stride-k binary search — no boxing
-          var j = 0
-          var ok = true
-          while (j < idxs.length && ok) {
-            if (src.isNullAt(idxs(j))) ok = false // null component: no match
-            else {
-              probe.buf(j) = dts(j) match {
-                case IntegerType => src.getInt(idxs(j)).toLong
-                case _ => src.getLong(idxs(j))
-              }
-              j += 1
-            }
-          }
-          if (ok && probe.containsLongs()) return true
-        } else {
-          val sb = new java.lang.StringBuilder()
-          var j = 0
-          var ok = true
-          while (j < idxs.length && ok) {
-            if (src.isNullAt(idxs(j))) ok = false // null component: no match
-            else dts(j) match {
-              case IntegerType => sb.append('L').append(src.getInt(idxs(j)).toLong)
-              case LongType => sb.append('L').append(src.getLong(idxs(j)))
-              case _ =>
-                val s = src.getUTF8String(idxs(j)).toString
-                sb.append('S').append(s.length).append(':').append(s)
-            }
-            j += 1
-          }
-          if (ok && probe.containsEncoded(sb.toString)) return true
-        }
-        t += 1
-      }
-      false
-    }
+    // matching equality-delete rows are skipped exactly like dv positions
+    val (decodedPhys, eqDel) = eqFilter(p, physical.toSeq)
     // row-group-pruned open: every group the predicates prove matchless
     // is skipped before page IO. None = nothing survives — emit no rows
     // (NEVER the reader==null metadata synthesis below, which means
@@ -5282,8 +5158,8 @@ case class LakeReaderFactory(tableSchema: StructType,
           var more = reader.nextKeyValue()
           while (more) {
             pos += 1
-            if (!deleted(pos) && (eqNone ||
-                !eqDead(reader.getCurrentValue.asInstanceOf[InternalRow])))
+            if (!deleted(pos) && (eqDel.isEmpty ||
+                !eqDel.deletes(reader.getCurrentValue.asInstanceOf[InternalRow])))
               return true
             more = reader.nextKeyValue()
           }
@@ -5336,34 +5212,7 @@ case class LakeReaderFactory(tableSchema: StructType,
     // projected ones (consts shift past them; they are never exposed):
     // matching rows join the dv rows in the same per-batch live-row
     // selection, so a CDC-fresh MOR table KEEPS the vectorized path
-    val eqApplicable: Seq[(LakeEqCol, LakeEqData)] = p.eqCols.flatMap(c =>
-      eqData.filter(e => e.cols.isEmpty && e.colId == c.colId && e.seq > p.seq)
-        .map(c -> _))
-    val eqTupleRecs: Seq[(Seq[LakeEqCol], LakeEqData)] =
-      eqData.filter(e => e.cols.nonEmpty && e.seq > p.seq).flatMap { e =>
-        val comps = e.cols.map { case (id, _) => p.eqCols.find(_.colId == id) }
-        if (comps.exists(_.isEmpty)) None else Some((comps.map(_.get), e))
-      }
-    val eqKeyCols: Seq[LakeEqCol] =
-      (eqApplicable.map(_._1) ++ eqTupleRecs.flatMap(_._1)).distinct
-    val presentPhys = present.map(t => p.rename(t._1)).toSeq
-    val eqExtra = eqKeyCols.map(_.phys).filterNot(presentPhys.contains)
-    val decodedPhys = presentPhys ++ eqExtra
-    val eqEvals: Array[(Int, DataType, Array[Long], java.util.HashSet[String])] =
-      eqKeyCols.filter(c => eqApplicable.exists(_._1 == c)).map { c =>
-        val ds = eqApplicable.collect { case (cc, e) if cc == c => e }
-        val strs = new java.util.HashSet[String]()
-        ds.flatMap(_.strs).foreach(strs.add)
-        (decodedPhys.indexOf(c.phys), LakeParquet.typeOf(c.fileType),
-          ds.flatMap(_.longs).distinct.sorted.toArray, strs)
-      }.toArray
-    val eqTupleEvals: Array[(Array[Int], Array[DataType], LakeTupleProbe)] =
-      eqTupleRecs.map { case (cs, e) =>
-        (cs.map(c => decodedPhys.indexOf(c.phys)).toArray,
-          cs.map(c => LakeParquet.typeOf(c.fileType)).toArray,
-          new LakeTupleProbe(e.tuples))
-      }.toArray
-    val eqNone = eqEvals.isEmpty && eqTupleEvals.isEmpty
+    val (decodedPhys, eqDel) = eqFilter(p, present.map(t => p.rename(t._1)).toSeq)
     val readerOpt =
       if (p.rgPreds.nonEmpty)
         LakeParquet.openVectorizedPruned(
@@ -5393,7 +5242,7 @@ case class LakeReaderFactory(tableSchema: StructType,
       }))
     reader.enableReturningBatches()
     val inner = reader.resultBatch()
-    // inner columns are (present ++ eqExtra ++ consts); re-expose in
+    // inner columns are (decodedPhys ++ consts); re-expose in
     // `required` order — the eq key vectors are read but never exposed
     val perm: Array[Int] = {
       var pi = 0
@@ -5413,7 +5262,7 @@ case class LakeReaderFactory(tableSchema: StructType,
         val isData = innerIdx < present.length
         val widen = isData && p.fileTypes.get(required(c)._1)
           .exists(t => LakeParquet.typeOf(t) != required(c)._2)
-        if (isData && (dv.nonEmpty || widen || !eqNone))
+        if (isData && (dv.nonEmpty || widen || !eqDel.isEmpty))
           new LakeSelectVector(v, required(c)._2, sel)
         else v
       }
@@ -5422,71 +5271,11 @@ case class LakeReaderFactory(tableSchema: StructType,
       private var fileOffset = 0L // file-absolute position of batch start
       private var dvIdx = 0
       private var outRows = 0
-      private def eqDeadAt(i: Int): Boolean = {
-        var e = 0
-        while (e < eqEvals.length) {
-          val (idx, dt, longs, strs) = eqEvals(e)
-          val kv = inner.column(idx)
-          if (!kv.isNullAt(i)) { // SQL IN: null never matches
-            val hit =
-              if (strs.isEmpty) {
-                val v = dt match {
-                  case IntegerType => kv.getInt(i).toLong
-                  case _ => kv.getLong(i)
-                }
-                java.util.Arrays.binarySearch(longs, v) >= 0
-              } else strs.contains(kv.getUTF8String(i).toString)
-            if (hit) return true
-          }
-          e += 1
-        }
-        var t = 0
-        while (t < eqTupleEvals.length) {
-          val (idxs, dts, probe) = eqTupleEvals(t)
-          if (probe.allLong) {
-            // primitive path for all-long composite keys: no
-            // StringBuilder/String per row in the hot batch loop
-            var j = 0
-            var ok = true
-            while (j < idxs.length && ok) {
-              val kv = inner.column(idxs(j))
-              if (kv.isNullAt(i)) ok = false // null component: no match
-              else {
-                probe.buf(j) = dts(j) match {
-                  case IntegerType => kv.getInt(i).toLong
-                  case _ => kv.getLong(i)
-                }
-                j += 1
-              }
-            }
-            if (ok && probe.containsLongs()) return true
-          } else {
-            val sb = new java.lang.StringBuilder()
-            var j = 0
-            var ok = true
-            while (j < idxs.length && ok) {
-              val kv = inner.column(idxs(j))
-              if (kv.isNullAt(i)) ok = false // null component: no match
-              else dts(j) match {
-                case IntegerType => sb.append('L').append(kv.getInt(i).toLong)
-                case LongType => sb.append('L').append(kv.getLong(i))
-                case _ =>
-                  val s = kv.getUTF8String(i).toString
-                  sb.append('S').append(s.length).append(':').append(s)
-              }
-              j += 1
-            }
-            if (ok && probe.containsEncoded(sb.toString)) return true
-          }
-          t += 1
-        }
-        false
-      }
       override def next(): Boolean = {
         val more = reader.nextBatch()
         if (more) {
           val n = inner.numRows
-          if (dv.isEmpty && eqNone) outRows = n
+          if (dv.isEmpty && eqDel.isEmpty) outRows = n
           else {
             // compact this batch's live rows into a selection map: one
             // merge pass over the SORTED vector, O(n + dv-in-range),
@@ -5499,7 +5288,7 @@ case class LakeReaderFactory(tableSchema: StructType,
             while (i < n) {
               val dvDead = di < dv.length && dv(di) == fileOffset + i
               if (dvDead) di += 1
-              if (!dvDead && (eqNone || !eqDeadAt(i))) {
+              if (!dvDead && (eqDel.isEmpty || !eqDel.deletes(inner.getRow(i)))) {
                 live(w) = i; w += 1
               }
               i += 1
@@ -5519,6 +5308,28 @@ case class LakeReaderFactory(tableSchema: StructType,
       override def close(): Unit = reader.close()
     }
   }
+}
+
+/** A write that demands the table's declared LAYOUT from Spark
+  * ([[RequiresDistributionAndOrdering]]): rows cluster by
+  * [[LakeTable.clusterCols]], sort within a task by `sortBy`, and
+  * shuffle toward `target_file_bytes` partitions. Batch appends, COW
+  * replaces, staged CTAS/RTAS and streaming epochs all extend it.
+  */
+abstract class LakeLayoutWrite(props: Map[String, String])
+  extends Write with RequiresDistributionAndOrdering {
+  override def requiredDistribution(): Distribution = {
+    val cluster = LakeTable.clusterCols(props)
+    if (cluster.isEmpty) Distributions.unspecified()
+    else Distributions.clustered(
+      cluster.map(c => Expressions.identity(c): VExpression).toArray)
+  }
+  override def requiredOrdering(): Array[SortOrder] =
+    props.get("sortBy")
+      .map(c => Array(Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)))
+      .getOrElse(Array.empty)
+  override def advisoryPartitionSizeInBytes(): Long =
+    LakeTable.targetFileBytes(props)
 }
 
 /** Append / truncate-write builder (INSERT INTO, and the overwrite half
@@ -5610,24 +5421,12 @@ class LakeWriteBuilder(dir: Path, tableSchema: StructType, info: LogicalWriteInf
     * each cluster key lands wholly in one file, and file stats come
     * out tight enough for metadata deletes and skipping to bite.
     */
-  override def build(): Write = new Write with RequiresDistributionAndOrdering {
-    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-    import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder}
-    override def requiredDistribution(): Distribution = {
-      if (deleteOnly) return Distributions.unspecified() // no files: no layout
-      val partCols = LakePartitioning.decode(props).map(_.col)
-      val cluster = (partCols ++ props.get("clusterBy")).distinct
-      if (cluster.isEmpty) Distributions.unspecified()
-      else Distributions.clustered(
-        cluster.map(c => Expressions.identity(c): VExpression).toArray)
-    }
+  override def build(): Write = new LakeLayoutWrite(props) {
+    // a delete_only write lands no files: no layout
+    override def requiredDistribution(): Distribution =
+      if (deleteOnly) Distributions.unspecified() else super.requiredDistribution()
     override def requiredOrdering(): Array[SortOrder] =
-      if (deleteOnly) Array.empty
-      else props.get("sortBy")
-        .map(c => Array(Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)))
-        .getOrElse(Array.empty)
-    override def advisoryPartitionSizeInBytes(): Long =
-      LakeTable.targetFileBytes(props)
+      if (deleteOnly) Array.empty else super.requiredOrdering()
     override def description(): String = s"graftlake-$mode"
     override def toBatch: BatchWrite = new BatchWrite {
       override def createBatchWriterFactory(pi: PhysicalWriteInfo): DataWriterFactory =
@@ -6447,6 +6246,21 @@ object LakeProcedures {
     (selectedTuples, candidates)
   }
 
+  /** A full-rewrite procedure's arrangement of `base` into `target`
+    * partitions, keeping the DECLARED layout: clustered by `clusterBy`
+    * and sorted within partitions by `sortBy`. The write path forces
+    * this layout on every append/COW, and a maintenance rewrite
+    * silently degrading it would un-tighten the very stats metadata
+    * deletes and skipping depend on.
+    */
+  private def compactionLayout(base: org.apache.spark.sql.DataFrame, target: Int,
+      props: Map[String, String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val spread = props.get("clusterBy")
+      .map(c => base.repartition(target, col(c))).getOrElse(base.repartition(target))
+    props.get("sortBy").map(c => spread.sortWithinPartitions(col(c))).getOrElse(spread)
+  }
+
   def load(name: String, catName: String, warehouse: Path): UnboundProcedure =
     name match {
       case "compact" => new UnboundProcedure {
@@ -6467,23 +6281,8 @@ object LakeProcedures {
             val snap = LakeLog.currentSnapshot(dir).get
             val fqn = s"$catName.${input.getUTF8String(0)}"
             // distributed rewrite: plain table read → repartition →
-            // the SAME task-side writers the write path uses. A table
-            // with a DECLARED layout keeps it: compaction re-clusters
-            // by `clusterBy` and re-sorts within partitions by
-            // `sortBy` — the write path forces this distribution on
-            // every append/COW, and a maintenance rewrite silently
-            // degrading it would un-tighten the very stats metadata
-            // deletes and skipping depend on.
-            import org.apache.spark.sql.functions.{col => fcol}
-            val base = spark.table(fqn)
-            val arranged = (snap.props.get("clusterBy"), snap.props.get("sortBy")) match {
-              case (Some(c), Some(s)) =>
-                base.repartition(target, fcol(c)).sortWithinPartitions(fcol(s))
-              case (Some(c), None) => base.repartition(target, fcol(c))
-              case (None, Some(s)) =>
-                base.repartition(target).sortWithinPartitions(fcol(s))
-              case _ => base.repartition(target)
-            }
+            // the SAME task-side writers the write path uses
+            val arranged = compactionLayout(spark.table(fqn), target, snap.props)
             val written = swapRewrite(dir, snap,
               arranged.queryExecution.toRdd, snap.schema,
               sortedBy = snap.props.get("sortBy").toSeq)
@@ -6576,14 +6375,7 @@ object LakeProcedures {
             val bytes = candidateFiles.map(_.bytes).sum
             val target = math.max(1, math.min(candidates.size,
               math.ceil(bytes.toDouble / perFile).toInt))
-            val arranged = (snap.props.get("clusterBy"), snap.props.get("sortBy")) match {
-              case (Some(c), Some(s)) =>
-                base.repartition(target, fcol(c)).sortWithinPartitions(fcol(s))
-              case (Some(c), None) => base.repartition(target, fcol(c))
-              case (None, Some(s)) =>
-                base.repartition(target).sortWithinPartitions(fcol(s))
-              case _ => base.repartition(target)
-            }
+            val arranged = compactionLayout(base, target, snap.props)
             val written = swapRewrite(dir, snap,
               arranged.queryExecution.toRdd, snap.schema,
               replacedFiles = Some(candSet),
@@ -6871,7 +6663,7 @@ object LakeProcedures {
       // refs + lifecycle procedures continue in [[loadRefs]] — the
       // split keeps this match readable around the shared rewrite
       // helpers
-      case other => loadRefs(other, catName, warehouse)
+      case other => loadRefs(other, warehouse)
     }
 
   /** The incremental z-order rewrite over `scope` (a subset of the
@@ -6998,8 +6790,7 @@ object LakeProcedures {
             (candidates.size, written.size, written.map(_.rows).sum)
   }
 
-  private def loadRefs(name: String, catName: String,
-      warehouse: Path): UnboundProcedure =
+  private def loadRefs(name: String, warehouse: Path): UnboundProcedure =
     name match {
 
       /** Operational INTEGRITY probe — what a fleet health-check calls
@@ -7587,7 +7378,7 @@ object LakeProcedures {
   * table is either fully the new definition or untouched.
   */
 class GraftStagedTable(dir: Path, ident: Identifier, stagedSchema: StructType,
-    stagedProps: Map[String, String], replace: Boolean, orCreate: Boolean)
+    stagedProps: Map[String, String], replace: Boolean)
   extends StagedTable with SupportsWrite {
 
   @volatile private var stagedFiles: Seq[LakeFile] = Seq.empty
@@ -7612,22 +7403,7 @@ class GraftStagedTable(dir: Path, ident: Identifier, stagedSchema: StructType,
       // a CTAS/RTAS with a declared layout must come out laid out like
       // any other write — staged files skipped the demand before this,
       // leaving a sortBy table unsorted until its first compact
-      override def build(): Write = new Write with RequiresDistributionAndOrdering {
-        import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-        import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder}
-        override def requiredDistribution(): Distribution = {
-          val partCols = LakePartitioning.decode(propsWithIds).map(_.col)
-          val cluster = (partCols ++ propsWithIds.get("clusterBy")).distinct
-          if (cluster.isEmpty) Distributions.unspecified()
-          else Distributions.clustered(
-            cluster.map(c => Expressions.identity(c): VExpression).toArray)
-        }
-        override def requiredOrdering(): Array[SortOrder] =
-          propsWithIds.get("sortBy")
-            .map(c => Array(Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)))
-            .getOrElse(Array.empty)
-        override def advisoryPartitionSizeInBytes(): Long =
-          LakeTable.targetFileBytes(propsWithIds)
+      override def build(): Write = new LakeLayoutWrite(propsWithIds) {
         override def description(): String = "graftlake-staged"
         override def toBatch: BatchWrite = new BatchWrite {
           override def createBatchWriterFactory(pi: PhysicalWriteInfo): DataWriterFactory =

@@ -630,39 +630,7 @@ case class LakeChangesReaderFactory(
       var i = 0
       while (i < evals.length) {
         val (idxs, dts, probe) = evals(i)
-        if (probe.allLong) {
-          // primitive membership for all-long keys (single-column longs
-          // included) — no per-row String in the feed's row loop
-          var j = 0
-          var ok = true
-          while (j < idxs.length && ok) {
-            if (row.isNullAt(idxs(j))) ok = false // SQL IN: null never matches
-            else {
-              probe.buf(j) = dts(j) match {
-                case IntegerType => row.getInt(idxs(j)).toLong
-                case _ => row.getLong(idxs(j))
-              }
-              j += 1
-            }
-          }
-          if (ok && probe.containsLongs()) return true
-        } else {
-          val sb = new java.lang.StringBuilder()
-          var j = 0
-          var ok = true
-          while (j < idxs.length && ok) {
-            if (row.isNullAt(idxs(j))) ok = false // SQL IN: null never matches
-            else dts(j) match {
-              case IntegerType => sb.append('L').append(row.getInt(idxs(j)).toLong)
-              case LongType => sb.append('L').append(row.getLong(idxs(j)))
-              case _ =>
-                val s = row.getUTF8String(idxs(j)).toString
-                sb.append('S').append(s.length).append(':').append(s)
-            }
-            j += 1
-          }
-          if (ok && probe.containsEncoded(sb.toString)) return true
-        }
+        if (probe.matches(row, idxs, dts)) return true
         i += 1
       }
       false

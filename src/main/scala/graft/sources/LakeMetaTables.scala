@@ -157,6 +157,17 @@ object LakeMetaTables {
     StructField("ndv", LongType, nullable = true),
     StructField("n_files", IntegerType, nullable = false)))
 
+  private def statsRow(fd: StructField, mm: Option[(Long, Long)], nulls: Option[Long],
+      ndv: Option[Long], nFiles: Int): InternalRow =
+    new GenericInternalRow(Array[Any](
+      UTF8String.fromString(fd.name),
+      UTF8String.fromString(fd.dataType.simpleString),
+      mm.map(v => Long.box(v._1)).orNull,
+      mm.map(v => Long.box(v._2)).orNull,
+      nulls.map(Long.box).orNull,
+      ndv.map(Long.box).orNull,
+      nFiles))
+
   /** `<table>__stats` — the table-level column statistics the
     * ESTIMATOR sees (exactly [[graft.sources.LakeScan]]'s
     * `columnStats` fold: integral min/max across files, summed null
@@ -189,51 +200,13 @@ object LakeMetaTables {
       manifest match {
         case Some((stats, n)) =>
           stats.map { case (name, mm, nulls, ndv) =>
-            val fd = snap.schema(name)
-            new GenericInternalRow(Array[Any](
-              UTF8String.fromString(name),
-              UTF8String.fromString(fd.dataType.simpleString),
-              mm.map(v => Long.box(v._1)).orNull,
-              mm.map(v => Long.box(v._2)).orNull,
-              nulls.map(Long.box).orNull,
-              ndv.map(Long.box).orNull,
-              n)): InternalRow
+            statsRow(snap.schema(name), mm, nulls, ndv, n)
           }
         case None => snap.schema.fields.toSeq.map { fd =>
-        val integral = fd.dataType == LongType || fd.dataType == IntegerType
-        var lo = Long.MaxValue; var hi = Long.MinValue
-        var nulls = 0L; var haveMm = integral; var haveNulls = true
-        var haveKmv = integral || fd.dataType == StringType
-        val kmvIn = Seq.newBuilder[Seq[Long]]
-        snap.files.foreach { f =>
-          LakeColIds.physicalName(cols, f, fd.name) match {
-            case None => nulls += f.rows // predates the column
-            case Some(p) =>
-              f.nulls.get(p) match {
-                case Some(nn) => nulls += nn
-                case None => haveNulls = false
-              }
-              f.stats.get(p) match {
-                case Some((l, h)) => lo = math.min(lo, l); hi = math.max(hi, h)
-                case None =>
-                  if (!f.nulls.get(p).contains(f.rows)) haveMm = false
-              }
-              f.kmv.get(p) match {
-                case Some(hs) => kmvIn += hs
-                case None => haveKmv = false
-              }
-          }
-        }
-        val mm = haveMm && lo <= hi
-        val ndv = if (haveKmv) LakeParquet.kmvEstimate(kmvIn.result()) else None
-        new GenericInternalRow(Array[Any](
-          UTF8String.fromString(fd.name),
-          UTF8String.fromString(fd.dataType.simpleString),
-          if (mm) Long.box(lo) else null,
-          if (mm) Long.box(hi) else null,
-          if (haveNulls) Long.box(nulls) else null,
-          ndv.map(Long.box).orNull,
-          snap.files.size)): InternalRow
+          val fold = new LakeColumnFold(fd)
+          snap.files.foreach(fold.addFile(cols, _))
+          val (mm, nulls, ndv) = fold.result()
+          statsRow(fd, mm, nulls, ndv, snap.files.size)
         }
       }
     }, s"graftlake.$baseName:stats")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.expressions.{Expressions, Literal => VLiteral, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.{Expressions, Literal => VLiteral, Transform}
 import org.apache.spark.sql.types._
 
 /** Table PARTITIONING for graftlake: `PARTITIONED BY (col)` (identity)

@@ -21,18 +21,7 @@ object DumpOracles {
       .orElse(if (Files.exists(sibling)) Some(Files.readString(sibling).trim)
               else None)
       .foreach(graft.queries.IngestQueries.retag)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    Files.writeString(Paths.get(out), graft.Verify.oracleJson(graft.SparkEntry.oracleSql))
     println(s"wrote ${graft.SparkEntry.oracleSql.size} oracles to $out")
   }
 }

@@ -58,8 +58,7 @@ case class LakeCdcApplyCommand(dirStr: String, source: LogicalPlan)
 
     // the layout the V2 write exec would have demanded
     val df = PlanBridge.ofRows(spark, source)
-    val partCols = LakePartitioning.decode(snap.props).map(_.col)
-    val cluster = (partCols ++ snap.props.get("clusterBy")).distinct
+    val cluster = LakeTable.clusterCols(snap.props)
     val clustered =
       if (cluster.isEmpty) df else df.repartition(cluster.map(col): _*)
     val arranged = snap.props.get("sortBy")

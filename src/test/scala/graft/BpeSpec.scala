@@ -67,7 +67,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("applyMerges equals the per-merge BpeMergeExpr fold on mixed tables") {
-    import spark.implicits._
     graft.functions.NativeExprs.ensureRegistered(spark)
     // rank order matters: ("b","c") before ("a","b") means "abc" keeps
     // its "a" — and ("ab","c") only fires once rank 2 has built "ab"

@@ -33,7 +33,6 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("coalesce mode plans no shuffle; repartition mode balances") {
-    import spark.implicits._
     val in = Files.createTempDirectory("compact-in2").toString
     spark.range(10000).toDF("id").repartition(16)
       .write.mode("overwrite").parquet(in)

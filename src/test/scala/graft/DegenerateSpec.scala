@@ -25,7 +25,6 @@ class DegenerateSpec extends AnyFunSuite {
   }
 
   test("ANN: k > n returns every non-self pair, ranks still dense") {
-    import spark.implicits._
     graft.functions.NativeExprs.ensureRegistered(spark)
     val side = vecsDf(4)
     val got = Similarity.bruteForceTopK(side, side, k = 10).collect()
@@ -37,7 +36,6 @@ class DegenerateSpec extends AnyFunSuite {
   }
 
   test("ANN: IVF with more centroids than candidates degrades to exact") {
-    import spark.implicits._
     graft.functions.NativeExprs.ensureRegistered(spark)
     val side = vecsDf(4)
     val exact = Similarity.bruteForceTopK(side, side, k = 3)
@@ -49,7 +47,6 @@ class DegenerateSpec extends AnyFunSuite {
   }
 
   test("ANN: single-subspace PQ (m=1) with full shortlist equals brute force") {
-    import spark.implicits._
     graft.functions.NativeExprs.ensureRegistered(spark)
     val side = vecsDf(5)
     val exact = Similarity.bruteForceTopK(side, side, k = 3)

@@ -1217,7 +1217,6 @@ class GraftLakeSpec extends AnyFunSuite {
   }
 
   test("atomic CTAS/RTAS: staged writes publish one version; failures leave no trace") {
-    import spark.implicits._
     // CTAS: one commit, data present
     spark.sql(
       """CREATE TABLE lake.db.t_ctas AS
@@ -2785,6 +2784,44 @@ class GraftLakeSpec extends AnyFunSuite {
     assert(bad.getMessage.contains("unsupported compression"))
   }
 
+  test("table properties: CREATE, CTAS and ALTER SET reject the same bad values") {
+    val cols = "(k BIGINT, s STRING, d DOUBLE)"
+    spark.sql(s"CREATE TABLE lake.db.t_propval $cols")
+    spark.sql("INSERT INTO lake.db.t_propval VALUES (1, 'a', 1.0)")
+    val v0 = LakeLog.currentSnapshot(tableDir("t_propval")).get
+    // (property, one bad value, the error it must raise)
+    val cases = Seq(
+      ("mode", "bogus", "mode must be 'cow' or 'mor'"),
+      ("sortBy", "nosuch", "must name a table column, got 'nosuch'"),
+      ("clusterBy", "nosuch", "must name a table column, got 'nosuch'"),
+      ("bloomBy", "k,nosuch", "must name a table column, got 'nosuch'"),
+      ("checkpoint_part_bytes", "lots", "checkpoint_part_bytes must be a positive integer"),
+      ("checkpoint_interval", "0", "checkpoint_interval must be a positive integer"),
+      ("target_file_bytes", "-1", "target_file_bytes must be a positive integer"),
+      ("compact_when_eq_records", "x", "compact_when_eq_records must be a positive integer"),
+      ("row_group_bytes", "0", "row_group_bytes must be a positive integer"),
+      ("compact_when_dv_pct", "200", "compact_when_dv_pct must be a percentage"),
+      ("upsert_key", "d", "upsert_key must name integral or string table columns"),
+      ("runtime_filter_cols", "nosuch", "runtime_filter_cols must name table columns"),
+      ("compression", "brotli9000", "unsupported compression 'brotli9000'"))
+    for ((k, v, msg) <- cases) {
+      val props = s"TBLPROPERTIES ('$k' = '$v')"
+      Seq(
+        "CREATE" -> s"CREATE TABLE lake.db.t_propval_new $cols $props",
+        "CTAS" -> s"CREATE TABLE lake.db.t_propval_new $props AS SELECT * FROM lake.db.t_propval",
+        "ALTER" -> s"ALTER TABLE lake.db.t_propval SET $props").foreach { case (path, sql) =>
+        val err = intercept[Exception](spark.sql(sql))
+        assert(chainMsg(err).contains(msg), s"$path $k = '$v': $err")
+      }
+      assert(LakeLog.currentSnapshot(tableDir("t_propval_new")).isEmpty,
+        s"a rejected CREATE/CTAS with $k = '$v' must leave no table")
+    }
+    // no ALTER committed, and the table still takes writes
+    assert(LakeLog.currentSnapshot(tableDir("t_propval")).get.props == v0.props)
+    spark.sql("INSERT INTO lake.db.t_propval VALUES (2, 'b', 2.0)")
+    assert(spark.table("lake.db.t_propval").count() == 2L)
+  }
+
   test("dynamic file pruning: trunc time buckets prune on the SOURCE column at runtime") {
     import spark.implicits._
     // the transform source is reportable: a runtime IN set of raw
@@ -4280,7 +4317,6 @@ class GraftLakeSpec extends AnyFunSuite {
   }
 
   test("shallow clone pins its source version with a tag: source vacuum cannot dangle the clone; drop_ref releases") {
-    import spark.implicits._
     val t = seeded("t_cl_pin")
     spark.sql(s"CALL lake.system.clone('db.$t', 'db.t_cl_pin2', -1)").collect()
     // the pin is an ordinary tag on the SOURCE at the cloned version —
@@ -4551,7 +4587,6 @@ class GraftLakeSpec extends AnyFunSuite {
   }
 
   test("a failed checkpoint never fails the commit, but leaves a durable marker the next success clears") {
-    import spark.implicits._
     spark.sql("CREATE TABLE lake.db.t_cpfail (id BIGINT)")
     val dir = tableDir("t_cpfail")
     def append(b: Int): Unit =
@@ -4578,7 +4613,6 @@ class GraftLakeSpec extends AnyFunSuite {
   }
 
   test("a lazy parted snapshot held across a racing vacuum refolds from the newer floor checkpoint instead of failing") {
-    import spark.implicits._
     spark.sql("""CREATE TABLE lake.db.t_cprace (id BIGINT)
       |TBLPROPERTIES ('checkpoint_part_bytes' = '512')""".stripMargin)
     val dir = tableDir("t_cprace")
@@ -4679,7 +4713,6 @@ class GraftLakeSpec extends AnyFunSuite {
   }
 
   test("checkpoint_interval is a table property: per-table cadence, bad values rejected") {
-    import spark.implicits._
     import scala.jdk.CollectionConverters._
     def nCheckpoints(name: String): Int = {
       val ld = tableDir(name).resolve("_log")
@@ -6065,7 +6098,7 @@ class GraftLakeSpec extends AnyFunSuite {
       (10L until 15L).map(k => (k, 0L, "D")): _*)
     val q = in.toDF().toDF("k", "v", "op").writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
           batch.createOrReplaceTempView("t_cdcs_batch")
           batch.sparkSession.sql(
@@ -6083,7 +6116,7 @@ class GraftLakeSpec extends AnyFunSuite {
     in.addData((12L, 120L, "U"), (3L, 0L, "D"))
     val q2 = in.toDF().toDF("k", "v", "op").writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
           batch.createOrReplaceTempView("t_cdcs_batch2")
           batch.sparkSession.sql(

@@ -25,14 +25,26 @@ class LoopParSpec extends AnyFunSuite {
   }
 
   test("rowsPerPartition conf steers the derivation") {
-    val old = spark.conf.getOption(LoopPar.RowsPerPartitionKey)
-    spark.conf.set(LoopPar.RowsPerPartitionKey, "10")
-    try {
+    LoopPar.withConf(spark, LoopPar.RowsPerPartitionKey -> "10") {
       assert(LoopPar.loopPartitions(spark, 25L) === math.min(3, width))
-    } finally old match {
-      case Some(v) => spark.conf.set(LoopPar.RowsPerPartitionKey, v)
-      case None => spark.conf.unset(LoopPar.RowsPerPartitionKey)
     }
+  }
+
+  test("withConf restores set keys and unsets unset ones, exceptions included") {
+    val unsetKey = "spark.graft.test.withConf"
+    val before = width
+    def check(): Unit = {
+      assert(width === before)
+      assert(spark.conf.getOption(unsetKey).isEmpty)
+    }
+    LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "3", unsetKey -> "x") {
+      assert(width === 3 && spark.conf.get(unsetKey) === "x")
+    }
+    check()
+    intercept[RuntimeException] {
+      LoopPar.withConf(spark, unsetKey -> "y") { throw new RuntimeException("boom") }
+    }
+    check()
   }
 
   test("withLoopParallelism restores the session width, exceptions included") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.unsafe.types.UTF8String
 
