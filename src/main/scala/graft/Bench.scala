@@ -56,23 +56,31 @@ object Bench {
     // The median rejects a single outlier in EITHER direction — min
     // could still reward one lucky fully-cached pass — so round-over-
     // round deltas are attributable to code, not load. Each rep still
-    // pays its own persists (dropCached between reps).
+    // pays its own persists (dropCached between reps). A query that
+    // throws is not timed at all: it stops its reps, stays out of
+    // `queries` and `total`, and is named in `failed`.
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => selected(q._1)).map { case (name, fn) =>
-      val reps = (1 to 3).map { _ =>
+      val reps = Iterator.range(0, 3).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e"); false }
         val t = (System.nanoTime() - t0) / 1e9
         dropCached()
-        t
-      }.sorted
-      name -> reps(1) // median of 3
+        Option.when(ok)(t)
+      }.takeWhile(_.isDefined).flatten.toSeq.sorted
+      name -> Option.when(reps.size == 3)(reps(1)) // median of 3
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val failed = results.collect { case (k, None) => k }
+    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val fs = failed.map(k => s"\"" + k + "\"").mkString("[", ",", "]")
+    val total = timed.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"sf":"$sfDir"}"""
     println(line)
     // ALSO land the line in a file: the r15 driver lost the stdout line
     // to tail truncation (BENCH_r15 unparseable → PERF_r16 had no
@@ -84,5 +92,6 @@ object Bench {
         (line + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -288,9 +288,8 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     val dir = tableDir(ident)
     if (LakeLog.currentSnapshot(dir).isDefined)
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    Files.createDirectories(dir.resolve("data"))
     val s0 = LakeSnapshot(0L, schema, Seq.empty, props ++ LakeColIds.freshProps(schema))
-    LakeLog.commit(dir, expectedVersion = -1L, s0)
+    LakeLog.create(dir, ident, s0)
     new LakeTable(dir, s0, None)
   }
 
@@ -418,11 +417,10 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = tableDir(ident)
+    if (LakeLog.currentVersion(dir).isEmpty)
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
     var result: LakeSnapshot = null
-    var done = false
-    while (!done) {
-      val cur = LakeLog.currentSnapshot(dir).getOrElse(
-        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
+    LakeLog.commitLoop(dir) { cur =>
       var schema = cur.schema
       var ids = LakeColIds.ids(schema, cur.props)
       var props = cur.props
@@ -604,7 +602,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
       props = props + ("colids" -> ids.mkString(",")) +
         ("maxcolid" -> maxId.toString)
       result = LakeSnapshot(cur.version + 1, schema, cur.files, props)
-      done = LakeLog.commit(dir, cur.version, result, parentSnap = Some(cur))
+      Some(LakeLog.Replace(result))
     }
     new LakeTable(dir, result, None)
   }
@@ -2020,33 +2018,116 @@ object LakeLog {
       files, props.getOrElse(Map.empty), eqdels))
   }
 
-  /** Publish `snapshot` as the successor of `expectedVersion` with an
-    * atomic create-if-absent of its DELTA vs the parent; returns false
-    * when another writer won the race (caller re-reads the head,
-    * revalidates, retries). Changed entries (a moved delete vector)
-    * ride as remove+add of that entry alone.
+  /** What one attempt of [[commitLoop]] publishes over the head it was
+    * handed: a full successor snapshot ([[Replace]], diffed against the
+    * head by [[commit]]) or a pure append ([[Append]], the O(changed)
+    * [[commitAppend]] fast path).
     */
+  sealed trait Successor
+  final case class Replace(snapshot: LakeSnapshot,
+      eqAdd: Seq[LakeEqDelete] = Seq.empty,
+      eqBase: Option[Seq[LakeEqDelete]] = None) extends Successor
+  final case class Append(added: Seq[LakeFile], props: Map[String, String],
+      eqAdd: Seq[LakeEqDelete] = Seq.empty) extends Successor
+
+  /** THE optimistic commit protocol every mutation runs: read the head,
+    * let `attempt` validate what the operation read against it and
+    * build the successor (or None: nothing to commit), publish it
+    * create-if-absent with that same head as the parent, and on a lost
+    * race start over from the new head. Returns what was published.
+    */
+  @scala.annotation.tailrec
+  def commitLoop(dir: Path)(attempt: LakeSnapshot => Option[Successor]): Option[Successor] = {
+    val head = currentSnapshot(dir).getOrElse(throw new IllegalStateException(
+      s"graftlake: $dir has no committed version"))
+    attempt(head) match {
+      case None => None
+      case Some(s) =>
+        val won = s match {
+          case Replace(snap, eqAdd, eqBase) =>
+            commit(dir, head.version, snap, eqAdd, eqBase, parentSnap = Some(head))
+          case Append(added, props, eqAdd) => commitAppend(dir, head, added, props, eqAdd)
+        }
+        if (won) Some(s) else commitLoop(dir)(attempt)
+    }
+  }
+
+  /** Snapshot isolation for an operation that scanned `scan` and READ
+    * the files `read`, checked against the head `cur` it is about to
+    * commit over: every read file must still be live with the delete
+    * vector it was scanned with (a moved vector is a concurrent
+    * row-level change — swapping in rows rebuilt from the old state
+    * resurrects its deletes, or lands a second insert for an updated
+    * row), and when the commit ADDS data files no equality-delete
+    * record may have landed since the scan (the new files are born at
+    * the new version, so such a record would not apply to them and the
+    * rows it replaced would come back). Nothing to check while the head
+    * is still the scanned version.
+    */
+  def requireReadSetCurrent(cur: LakeSnapshot, scan: LakeSnapshot,
+      read: Set[String], addsData: Boolean): Unit =
+    if (cur.version != scan.version) {
+      def dvs(s: LakeSnapshot) =
+        s.files.iterator.filter(f => read(f.path)).map(f => f.path -> f.dv).toMap
+      val live = dvs(cur)
+      require(read.subsetOf(live.keySet),
+        s"concurrent update: files ${read -- live.keySet} no longer live at v${cur.version}")
+      val scanned = dvs(scan)
+      read.foreach(p => require(live(p) == scanned.getOrElse(p, None),
+        s"concurrent row-level change: delete vector of $p moved since this operation's scan"))
+      if (addsData) {
+        val seen = scan.eqdels.map(_.seq).toSet
+        require(cur.eqdels.forall(e => seen(e.seq)),
+          "concurrent equality delete invalidated this operation's scan")
+      }
+    }
+
+  /** Publish `snapshot` as a NEW table's v0, create-if-absent: the
+    * loser of a concurrent create (CREATE TABLE, CTAS, clone) fails
+    * instead of returning a definition that was never committed.
+    */
+  def create(dir: Path, ident: Identifier, snapshot: LakeSnapshot): Unit = {
+    Files.createDirectories(dir.resolve("data"))
+    if (!commit(dir, -1L, snapshot))
+      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
+  }
+
+  /** The log entries of freshly WRITTEN files under the table's
+    * `schema`/`props`: column ids and write-time types, the current
+    * partition spec, `sorted` = the sort layout the write enforced
+    * (empty when none was), and `stamp` = the streaming (query, epoch)
+    * that wrote them.
+    */
+  def writtenEntries(written: Seq[LakeFileInfo], schema: StructType,
+      props: Map[String, String], sorted: Seq[String],
+      stamp: Option[(String, Long)] = None): Seq[LakeFile] = {
+    val cols = LakeColIds.cols(schema, props)
+    val colTypes = LakeColIds.types(schema)
+    val specId = LakePartitioning.currentSpecId(props)
+    written.map(i => LakeFile(i.path, i.rows, i.stats, epoch = stamp.map(_._2),
+      nulls = i.nulls, query = stamp.map(_._1), cols = cols, part = i.part,
+      colTypes = colTypes, specId = specId, bytes = i.bytes, sorted = sorted,
+      sums = i.sums, blooms = i.blooms, kmv = i.kmv, bloomSc = i.bloomSc,
+      sstats = i.sstats))
+  }
+
   /** APPEND-ONLY commit fast path: publish `added` as the successor of
-    * `expectedVersion` WITHOUT materializing the parent's file census —
-    * the O(table)-per-commit driver cost the full diff pays. A lazy
-    * parted parent stays lazy end to end: schema/props and the
-    * equality-delete set come from the parent's O(1) header fold, a
-    * pure add changes no record's liveness (nothing is removed and the
-    * new files are the youngest), and the cadence checkpoint
-    * reconstructs the published version lazily so the INCREMENTAL
-    * part-reuse planner serializes only touched parts. The streaming
-    * ingest loop is O(changed) end to end: delta write, checkpoint,
-    * and planning all scale with the commit, never the table. Returns
-    * false on a lost race, like [[commit]].
+    * the held `parent` WITHOUT materializing its file census — the
+    * O(table)-per-commit census cost the full diff pays. A lazy parted
+    * parent stays lazy end to end: schema and the equality-delete set
+    * come from the parent's O(1) header fold, a pure add changes no
+    * record's liveness (nothing is removed and the new files are the
+    * youngest), and the cadence checkpoint reconstructs the published
+    * version lazily so the INCREMENTAL part-reuse planner serializes
+    * only touched parts. The streaming ingest loop is O(changed) end to
+    * end: delta write, checkpoint, and planning all scale with the
+    * commit, never the table. Returns false on a lost race, like
+    * [[commit]].
     */
-  def commitAppend(dir: Path, expectedVersion: Long, added: Seq[LakeFile],
-      schema: StructType, props: Map[String, String],
-      eqAdd: Seq[LakeEqDelete] = Seq.empty): Boolean = {
-    require(expectedVersion >= 0L, "commitAppend needs an existing parent")
-    val v = expectedVersion + 1L
-    val parent = snapshotAt(dir, expectedVersion).getOrElse(
-      throw new IllegalStateException(
-        s"cannot commit v$v: parent v$expectedVersion unreadable"))
+  private def commitAppend(dir: Path, parent: LakeSnapshot, added: Seq[LakeFile],
+      props: Map[String, String], eqAdd: Seq[LakeEqDelete]): Boolean = {
+    val v = parent.version + 1L
+    val schema = parent.schema
     val stamped = added.map(f => if (f.seq == 0L) f.copy(seq = v) else f)
     // a NEW record is live iff anything at all predates it; liveness
     // must be decided CONSERVATIVELY without materializing (a wrongly
@@ -2108,15 +2189,22 @@ object LakeLog {
     }
   }
 
+  /** Publish `snapshot` as the successor of `expectedVersion` with an
+    * atomic create-if-absent of its DELTA vs the parent; returns false
+    * when another writer won the race (the caller re-reads the head,
+    * revalidates, retries — [[commitLoop]]). Changed entries (a moved
+    * delete vector) ride as remove+add of that entry alone.
+    * `parentSnap` is the parent the caller already HOLDS (the head
+    * [[commitLoop]] just read and built `snapshot` from): it is used as
+    * is instead of re-reading and re-folding the census; without it the
+    * parent is read from the log. `expectedVersion = -1` publishes v0.
+    */
   def commit(dir: Path, expectedVersion: Long, snapshot: LakeSnapshot,
       eqAdd: Seq[LakeEqDelete] = Seq.empty,
       eqBase: Option[Seq[LakeEqDelete]] = None,
       parentSnap: Option[LakeSnapshot] = None): Boolean = {
     require(snapshot.version == expectedVersion + 1,
       s"commit must advance the version by one: $expectedVersion -> ${snapshot.version}")
-    // the caller usually HOLDS the parent it derived `snapshot` from
-    // (every retry loop just read it) — accept it instead of re-reading
-    // and re-folding the census per commit
     parentSnap.foreach(p => require(p.version == expectedVersion,
       s"commit: parentSnap v${p.version} is not the expected parent v$expectedVersion"))
     val parent =
@@ -3180,20 +3268,14 @@ class LakeTable(dir: Path, snapshot: LakeSnapshot, pinnedVersion: Option[Long])
       if (ident.isNullAt(i)) None
       else Some(String.valueOf(ident.get(i, schema0(i).dataType)))
     }
-    var dropped = false
-    var done = false
-    while (!done) {
-      val cur = LakeLog.currentSnapshot(dir).get
+    LakeLog.commitLoop(dir) { cur =>
       val curId = LakePartitioning.currentSpecId(cur.props)
       require(cur.files.forall(_.specId == curId),
         "graftlake: drop partition with files from an older partition " +
           "spec is ambiguous — run CALL system.compact first")
       val (hit, keep) = cur.files.partition(_.part == key)
-      dropped = hit.nonEmpty
-      done = hit.isEmpty || LakeLog.commit(dir, cur.version, cur.next(keep),
-        parentSnap = Some(cur))
-    }
-    dropped
+      if (hit.isEmpty) None else Some(LakeLog.Replace(cur.next(keep)))
+    }.isDefined
   }
 
   override def truncatePartition(ident: InternalRow): Boolean = dropPartition(ident)
@@ -3364,12 +3446,8 @@ class LakeTable(dir: Path, snapshot: LakeSnapshot, pinnedVersion: Option[Long])
         if (kind == "long") LakeEq.writeLongs(dir, ls.toArray)
         else LakeEq.writeStrs(dir, ss.toArray)
       val eq = LakeEqDelete(0L, id, ref, (ls.length + ss.length).toLong, kind)
-      var done = false
-      while (!done) {
-        val cur = LakeLog.currentSnapshot(dir).get
-        done = LakeLog.commit(dir, cur.version, cur.next(cur.files),
-          eqAdd = Seq(eq), parentSnap = Some(cur))
-      }
+      LakeLog.commitLoop(dir)(cur =>
+        Some(LakeLog.Replace(cur.next(cur.files), eqAdd = Seq(eq))))
       return
     }
     tupleDeletable(predicates) match {
@@ -3378,18 +3456,12 @@ class LakeTable(dir: Path, snapshot: LakeSnapshot, pinnedVersion: Option[Long])
         val ref = LakeEq.writeTuples(dir, tuples, cs.map(_._2))
         val eq = LakeEqDelete(0L, cs.head._1, ref, tuples.length.toLong,
           "tuple", cols = cs)
-        var done = false
-        while (!done) {
-          val cur = LakeLog.currentSnapshot(dir).get
-          done = LakeLog.commit(dir, cur.version, cur.next(cur.files),
-            eqAdd = Seq(eq), parentSnap = Some(cur))
-        }
+        LakeLog.commitLoop(dir)(cur =>
+          Some(LakeLog.Replace(cur.next(cur.files), eqAdd = Seq(eq))))
         return
       case None => ()
     }
-    var done = false
-    while (!done) {
-      val cur = LakeLog.currentSnapshot(dir).get
+    LakeLog.commitLoop(dir) { cur =>
       val cols = LakeColIds.cols(cur.schema, cur.props)
       val keep = cur.files.filter(f =>
         LakeStats.decide(f, predicates, LakeColIds.physicalName(cols, f, _),
@@ -3399,18 +3471,12 @@ class LakeTable(dir: Path, snapshot: LakeSnapshot, pinnedVersion: Option[Long])
           case LakeStats.Mixed => throw new IllegalStateException(
             s"deleteWhere on undecidable file ${f.path} (canDeleteWhere was false)")
         })
-      done = LakeLog.commit(dir, cur.version, cur.next(keep),
-        parentSnap = Some(cur))
+      Some(LakeLog.Replace(cur.next(keep)))
     }
   }
 
   override def truncateTable(): Boolean = {
-    var done = false
-    while (!done) {
-      val cur = LakeLog.currentSnapshot(dir).get
-      done = LakeLog.commit(dir, cur.version, cur.next(Seq.empty),
-        parentSnap = Some(cur))
-    }
+    LakeLog.commitLoop(dir)(cur => Some(LakeLog.Replace(cur.next(Seq.empty))))
     true
   }
 
@@ -3470,31 +3536,14 @@ class LakeRowLevelOperation(dir: Path, snapshot: LakeSnapshot,
               codec = LakeTable.codecOf(snapshot.props),
               rowGroupBytes = LakeTable.rowGroupBytes(snapshot.props))
           override def commit(messages: Array[WriterCommitMessage]): Unit = {
-            val written = messages.map(_.asInstanceOf[LakeFileMessage])
-              .flatMap(_.files)
-              .map(i => LakeFile(i.path, i.rows, i.stats, nulls = i.nulls,
-                cols = LakeColIds.cols(snapshot.schema, snapshot.props),
-                part = i.part, colTypes = LakeColIds.types(snapshot.schema),
-                specId = LakePartitioning.currentSpecId(snapshot.props), bytes = i.bytes,
-                sorted = snapshot.props.get("sortBy").toSeq, sums = i.sums, blooms = i.blooms, kmv = i.kmv,
-                bloomSc = i.bloomSc, sstats = i.sstats)).toSeq
+            val written = LakeLog.writtenEntries(
+              messages.toSeq.flatMap(_.asInstanceOf[LakeFileMessage].files),
+              snapshot.schema, snapshot.props, snapshot.props.get("sortBy").toSeq)
             val replaced = scannedFiles.toSet
-            var done = false
-            while (!done) {
-              val cur = LakeLog.currentSnapshot(dir).get
-              // snapshot-isolation check: every file this op rewrote must
-              // still be live, or a concurrent commit invalidated our read
-              require(replaced.subsetOf(cur.files.map(_.path).toSet),
-                s"concurrent update: files $replaced no longer live at v${cur.version}")
-              // the rewritten files are born at the NEW version, ESCAPING
-              // any equality delete that landed after this op's scan —
-              // its deleted rows would resurrect in them; abort instead
-              require(cur.eqdels.map(_.seq).toSet ==
-                snapshot.eqdels.map(_.seq).toSet,
-                "concurrent equality delete invalidated this rewrite's scan")
-              done = LakeLog.commit(dir, cur.version,
-                cur.next(cur.files.filterNot(f => replaced(f.path)) ++ written),
-                parentSnap = Some(cur))
+            LakeLog.commitLoop(dir) { cur =>
+              LakeLog.requireReadSetCurrent(cur, snapshot, replaced, written.nonEmpty)
+              Some(LakeLog.Replace(
+                cur.next(cur.files.filterNot(f => replaced(f.path)) ++ written)))
             }
           }
           override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -5446,14 +5495,9 @@ class LakeWriteBuilder(dir: Path, tableSchema: StructType, info: LogicalWriteInf
             "graftlake: a delete_only write must produce no data files")
         }
         val eqAdd = upsertRecord(messages)
-        val written = messages.map(_.asInstanceOf[LakeFileMessage])
-          .flatMap(_.files)
-          .map(i => LakeFile(i.path, i.rows, i.stats, nulls = i.nulls,
-            cols = LakeColIds.cols(tableSchema, props),
-            part = i.part, colTypes = LakeColIds.types(tableSchema),
-            specId = LakePartitioning.currentSpecId(props), bytes = i.bytes,
-            sorted = props.get("sortBy").toSeq, sums = i.sums, blooms = i.blooms, kmv = i.kmv,
-                bloomSc = i.bloomSc, sstats = i.sstats)).toSeq
+        val written = LakeLog.writtenEntries(
+          messages.toSeq.flatMap(_.asInstanceOf[LakeFileMessage].files),
+          tableSchema, props, props.get("sortBy").toSeq)
         // IDEMPOTENT writes: with txnAppId/txnVersion options, a commit
         // whose version the table has already recorded for that app is
         // a REPLAY (a foreachBatch retry, a restarted driver) — its
@@ -5463,29 +5507,25 @@ class LakeWriteBuilder(dir: Path, tableSchema: StructType, info: LogicalWriteInf
           a <- Option(info.options().get("txnAppId"))
           v <- Option(info.options().get("txnVersion"))
         } yield (a, v.toLong)
-        var done = false
-        while (!done) {
-          val cur = LakeLog.currentSnapshot(dir).get
-          txn match {
-            case Some((app, v)) if cur.props.get(s"txn.$app").exists(_.toLong >= v) =>
-              LakeWriterFactory.deleteAll(dir.toString, messages)
-              return
-            case _ => ()
-          }
+        LakeLog.commitLoop(dir) { cur =>
+          val replay = txn.exists { case (app, v) =>
+            cur.props.get(s"txn.$app").exists(_.toLong >= v) }
           val txnProps = txn.fold(cur.props) { case (a, v) =>
             cur.props + (s"txn.$a" -> v.toString) }
-          if (mode == Append) {
+          def replace(base: Seq[LakeFile]) = LakeLog.Replace(
+            LakeSnapshot(cur.version + 1, cur.schema, base ++ written, txnProps),
+            eqAdd = eqAdd)
+          if (replay) {
+            LakeWriterFactory.deleteAll(dir.toString, messages)
+            None
+          } else Some(mode match {
             // fast path: a pure append never needs the parent's file
             // census — O(changed) driver work however large the table
-            done = LakeLog.commitAppend(dir, cur.version, written,
-              cur.schema, txnProps, eqAdd = eqAdd)
-          } else {
-          val base = mode match {
-            case Append => cur.files
-            case Truncate => Seq.empty
+            case Append => LakeLog.Append(written, txnProps, eqAdd = eqAdd)
+            case Truncate => replace(Seq.empty)
             case OverwriteWhere(preds) =>
               val cols = LakeColIds.cols(cur.schema, cur.props)
-              cur.files.filter { f =>
+              replace(cur.files.filter { f =>
                 LakeStats.decide(f, preds, LakeColIds.physicalName(cols, f, _),
                   LakePartitioning.resolver(cur.props, f)) match {
                   case LakeStats.All => false // fully covered: replaced
@@ -5495,7 +5535,7 @@ class LakeWriteBuilder(dir: Path, tableSchema: StructType, info: LogicalWriteInf
                       s"boundaries at ${f.path} — overwrite by partition " +
                       "(or a file-decidable predicate), or use DELETE + append")
                 }
-              }
+              })
             case DynamicParts =>
               // tuple equality across spec eras is meaningless — an
               // old-era file logically overlapping a replaced partition
@@ -5508,12 +5548,8 @@ class LakeWriteBuilder(dir: Path, tableSchema: StructType, info: LogicalWriteInf
                   "CALL system.compact to rewrite them under the current " +
                   "spec first")
               val replaced = written.map(_.part).toSet
-              cur.files.filterNot(f => replaced.contains(f.part))
-          }
-          done = LakeLog.commit(dir, cur.version,
-            LakeSnapshot(cur.version + 1, cur.schema, base ++ written, txnProps),
-            eqAdd = eqAdd, parentSnap = Some(cur))
-          }
+              replace(cur.files.filterNot(f => replaced.contains(f.part)))
+          })
         }
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -5570,24 +5606,17 @@ class LakeWriteBuilder(dir: Path, tableSchema: StructType, info: LogicalWriteInf
           LakeStreamingWriterFactory(factory, boundChecks)
         override def commit(epochId: Long,
             messages: Array[WriterCommitMessage]): Unit = {
-          val written = messages.map(_.asInstanceOf[LakeFileMessage])
-            .flatMap(_.files)
-            .map(i => LakeFile(i.path, i.rows, i.stats, epoch = Some(epochId),
-              nulls = i.nulls, query = Some(queryId),
-              cols = LakeColIds.cols(tableSchema, props),
-              part = i.part, colTypes = LakeColIds.types(tableSchema),
-              specId = LakePartitioning.currentSpecId(props), bytes = i.bytes,
-              sorted = props.get("sortBy").toSeq, sums = i.sums, blooms = i.blooms, kmv = i.kmv,
-                bloomSc = i.bloomSc, sstats = i.sstats)).toSeq
+          val written = LakeLog.writtenEntries(
+            messages.toSeq.flatMap(_.asInstanceOf[LakeFileMessage].files),
+            tableSchema, props, props.get("sortBy").toSeq,
+            stamp = Some((queryId, epochId)))
           // an epoch REPLAY accumulates a redundant equality-delete
           // record (same key set, higher seq — semantically idempotent:
           // strict birth-seq scoping excludes the replayed files
           // themselves, and no later epoch can have committed, or this
           // one's offsets would not replay); compaction clears it
           val eqAdd = upsertRecord(messages)
-          var done = false
-          while (!done) {
-            val cur = LakeLog.currentSnapshot(dir).get
+          LakeLog.commitLoop(dir) { cur =>
             // per-query epoch WATERMARK (`qe.<queryId>` prop, the txn.
             // pattern): a first-time epoch provably replaces nothing,
             // so the O(changed) append fast path serves — the
@@ -5598,17 +5627,15 @@ class LakeWriteBuilder(dir: Path, tableSchema: StructType, info: LogicalWriteInf
             val wm = cur.props.get(wmKey).flatMap(_.toLongOption)
             val props2 = cur.props +
               (wmKey -> math.max(epochId, wm.getOrElse(-1L)).toString)
-            done =
-              if (wm.forall(epochId > _))
-                LakeLog.commitAppend(dir, cur.version, written,
-                  cur.schema, props2, eqAdd = eqAdd)
-              else {
-                val keep = cur.files.filterNot(f =>
-                  f.epoch.contains(epochId) && f.query.contains(queryId))
-                LakeLog.commit(dir, cur.version,
-                  LakeSnapshot(cur.version + 1, cur.schema, keep ++ written, props2),
-                  eqAdd = eqAdd, parentSnap = Some(cur))
-              }
+            if (wm.forall(epochId > _))
+              Some(LakeLog.Append(written, props2, eqAdd = eqAdd))
+            else {
+              val keep = cur.files.filterNot(f =>
+                f.epoch.contains(epochId) && f.query.contains(queryId))
+              Some(LakeLog.Replace(
+                LakeSnapshot(cur.version + 1, cur.schema, keep ++ written, props2),
+                eqAdd = eqAdd))
+            }
           }
         }
         override def abort(epochId: Long,
@@ -6000,18 +6027,23 @@ object LakeProcedures {
   import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
   import org.apache.spark.sql.connector.read.LocalScan
 
-  val Names: Array[String] =
-    Array("compact", "compact_size", "compact_where", "zorder",
-      "zorder_where", "vacuum", "maintain",
-      "history", "evolve_partitioning", "tag", "branch", "publish",
-      "drop_ref", "rollback", "clone", "health")
-
   private def out(schema0: StructType, rows0: Seq[InternalRow]): java.util.Iterator[Scan] =
     java.util.List.of[Scan](new LocalScan {
       override def readSchema(): StructType = schema0
       override def rows(): Array[InternalRow] = rows0.toArray
       override def description(): String = "graftlake-procedure-result"
     }).iterator()
+
+  /** A one-row procedure result (Scala strings become UTF8String). */
+  private def one(schema0: StructType, values: Any*): java.util.Iterator[Scan] =
+    out(schema0, Seq(new GenericInternalRow(values.map {
+      case v: String => UTF8String.fromString(v)
+      case v => v
+    }.toArray)))
+
+  /** A result schema of NOT NULL columns. */
+  private def columns(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })
 
   private def resolve(warehouse: Path, tableRef: String): Path =
     tableRef.split('.').foldLeft(warehouse)(_.resolve(_))
@@ -6042,7 +6074,7 @@ object LakeProcedures {
     val bloomInline = LakeTable.bloomInline(snap.props)
     val codec = LakeTable.codecOf(snap.props)
     val rowGroupBytes = LakeTable.rowGroupBytes(snap.props)
-    val written = rows
+    val infos = rows
       .mapPartitionsWithIndex { (pid, it) =>
         val w = LakeWriterFactory(dirStr, writeSchema, cols,
           partSpec, bloomBy = bloomBy, bloomInline = bloomInline,
@@ -6051,49 +6083,25 @@ object LakeProcedures {
         Iterator(w.commit())
       }.collect().toSeq
       .flatMap { case m: LakeFileMessage => m.files }
-      .map(i => LakeFile(i.path, i.rows, i.stats, nulls = i.nulls,
-        cols = LakeColIds.cols(snap.schema, snap.props), part = i.part,
-        colTypes = LakeColIds.types(snap.schema),
-        specId = LakePartitioning.currentSpecId(snap.props), bytes = i.bytes,
-        sorted = sortedBy, sums = i.sums, blooms = i.blooms, kmv = i.kmv,
-                bloomSc = i.bloomSc, sstats = i.sstats))
+    val written = LakeLog.writtenEntries(infos, snap.schema, snap.props, sortedBy)
     // a PARTIAL rewrite (compact_size) swaps only its candidates;
     // conforming files keep their paths, stats, and layout
     val replaced = replacedFiles.getOrElse(snap.files.map(_.path).toSet)
-    // row-level snapshot isolation (the LakeDeltaOperation.scanDv rule):
-    // path existence alone is NOT enough — a concurrent MOR DELETE adds
-    // a delete vector to a candidate WITHOUT removing its path, and
-    // swapping in files rebuilt from the pre-delete rows would silently
-    // resurrect the deleted rows. Every replaced file's dv reference
-    // must still be exactly what this rewrite scanned.
-    val scanDv = snap.files.filter(f => replaced(f.path))
-      .map(f => f.path -> f.dv).toMap
-    var done = false
-    while (!done) {
-      val cur = LakeLog.currentSnapshot(dir).get
-      val live = cur.files.map(f => f.path -> f).toMap
-      require(replaced.subsetOf(live.keySet),
-        "concurrent rewrite invalidated this rewrite's snapshot")
-      // same rule for EQUALITY deletes as for dvs below: rebuilt files
-      // are born at the new version and escape records that landed
-      // after this rewrite's scan — their rows would resurrect
-      require(cur.eqdels.map(_.seq).toSet == snap.eqdels.map(_.seq).toSet,
-        "concurrent equality delete invalidated this rewrite's snapshot")
-      replaced.foreach { p =>
-        require(live(p).dv == scanDv(p),
-          s"concurrent row-level change: delete vector of $p moved since this rewrite's scan")
-      }
-      done = LakeLog.commit(dir, cur.version,
-        cur.next(cur.files.filterNot(f => replaced(f.path)) ++ written),
-        parentSnap = Some(cur))
+    LakeLog.commitLoop(dir) { cur =>
+      LakeLog.requireReadSetCurrent(cur, snap, replaced, written.nonEmpty)
+      Some(LakeLog.Replace(cur.next(cur.files.filterNot(f => replaced(f.path)) ++ written)))
     }
     written
   }
 
-  private val rewriteResultSchema = StructType(Seq(
-    StructField("files_before", IntegerType, nullable = false),
-    StructField("files_after", IntegerType, nullable = false),
-    StructField("rows_rewritten", LongType, nullable = false)))
+  private val rewriteResultSchema = columns(
+    "files_before" -> IntegerType, "files_after" -> IntegerType, "rows_rewritten" -> LongType)
+
+  /** `compact_where` / `zorder_where`: the rewrite counts after the
+    * number of partitions the predicate selected.
+    */
+  private val scopedRewriteSchema = StructType(
+    columns("partitions_selected" -> IntegerType).fields ++ rewriteResultSchema.fields)
 
   /** The shared LOG-ONLY partition planner of `compact_where` /
     * `zorder_where`: distinct current-era partition tuples of `snap`
@@ -6261,410 +6269,777 @@ object LakeProcedures {
     props.get("sortBy").map(c => spread.sortWithinPartitions(col(c))).getOrElse(spread)
   }
 
-  def load(name: String, catName: String, warehouse: Path): UnboundProcedure =
-    name match {
-      case "compact" => new UnboundProcedure {
-        override def name(): String = "compact"
-        override def description(): String =
-          "compact(table STRING, target_files INT): rewrite live files into target_files files"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "compact"
-          override def description(): String = "graftlake compaction"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("target_files", IntegerType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val target = math.max(1, input.getInt(1))
-            val spark = org.apache.spark.sql.SparkSession.active
-            val snap = LakeLog.currentSnapshot(dir).get
-            val fqn = s"$catName.${input.getUTF8String(0)}"
-            // distributed rewrite: plain table read → repartition →
-            // the SAME task-side writers the write path uses
-            val arranged = compactionLayout(spark.table(fqn), target, snap.props)
-            val written = swapRewrite(dir, snap,
-              arranged.queryExecution.toRdd, snap.schema,
-              sortedBy = snap.props.get("sortBy").toSeq)
-            out(rewriteResultSchema,
-              Seq(new GenericInternalRow(Array[Any](
-                snap.files.size, written.size, written.map(_.rows).sum))))
-          }
-        }
-      }
+  /** One stored procedure: its name, signature doc, IN parameters and
+    * body. The table below is the ONE list of procedures — `Names`
+    * (what `listProcedures` reports and `loadProcedure` accepts) and
+    * the dispatch in [[load]] both read it.
+    */
+  private final case class Proc(name: String, doc: String,
+      params: Seq[(String, DataType)], body: Call => java.util.Iterator[Scan])
 
-      /** MERGE-ON-READ backlog maintenance policy. `maintain(table)`
-        * reads two operator thresholds (validated at CREATE/ALTER) and
-        * resolves whichever backlog reached its line, in ONE rewrite:
-        *
-        *  - `compact_when_eq_records = N`: once the LIVE equality
-        *    record count reaches N, rewrites exactly the files any
-        *    record predates (reading them applies dvs + the anti-join,
-        *    so the rebirths come out clean at the new version); the
-        *    commit's auto-prune then drops the whole record set — the
-        *    next scan plans zero eq key columns.
-        *  - `compact_when_dv_pct = P`: any file whose delete vector
-        *    covers ≥ P% of its rows rewrites clean — the per-read
-        *    position-skip tax (and the dead bytes) are reclaimed file
-        *    by file, never table-wide.
-        *
-        * Below both lines (or without the properties) the call is a
-        * NO-OP, so operators script it after every ingest cycle and
-        * pay rewrites only when a read tax would otherwise compound.
-        * Files outside both candidate sets keep their paths, stats,
-        * and layout untouched.
-        */
-      case "maintain" => new UnboundProcedure {
-        override def name(): String = "maintain"
-        override def description(): String =
-          "maintain(table STRING): resolve the equality-record / delete-vector " +
-            "backlogs once compact_when_eq_records / compact_when_dv_pct are " +
-            "reached; no-op below the thresholds"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "maintain"
-          override def description(): String = "graftlake MOR-backlog maintenance"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val spark = org.apache.spark.sql.SparkSession.active
-            val snap = LakeLog.currentSnapshot(dir).get
-            val resultSchema = StructType(Seq(
-              StructField("triggered", BooleanType, nullable = false),
-              StructField("eq_records", IntegerType, nullable = false),
-              StructField("threshold", LongType, nullable = true),
-              StructField("files_rewritten", IntegerType, nullable = false),
-              StructField("rows_rewritten", LongType, nullable = false),
-              StructField("dv_files", IntegerType, nullable = false)))
-            val threshold = snap.props.get("compact_when_eq_records")
-              .flatMap(_.toLongOption)
-            val dvPct = snap.props.get("compact_when_dv_pct")
-              .flatMap(_.toLongOption)
-            val records = snap.eqdels.size
-            def row(trig: Boolean, nf: Int, nr: Long, dvf: Int) =
-              out(resultSchema, Seq(new GenericInternalRow(Array[Any](
-                trig, records, threshold.map(Long.box).orNull, nf, nr, dvf))))
-            val eqFire = threshold.exists(records >= _)
-            // every file ANY record predates must be reborn, or the
-            // commit's prune rule keeps the records alive (a live
-            // record implies at least one such file exists)
-            val eqCands =
-              if (!eqFire) Seq.empty[LakeFile]
-              else {
-                val maxSeq = snap.eqdels.map(_.seq).max
-                snap.files.filter(_.seq < maxSeq)
-              }
-            val dvCands = dvPct.map(p => snap.files.filter(f =>
-              f.dvRows > 0L && f.dvRows * 100L >= p * f.rows))
-              .getOrElse(Seq.empty)
-            if (!eqFire && dvCands.isEmpty) return row(trig = false, 0, 0L, 0)
-            val eqPaths = eqCands.map(_.path).toSet
-            val candidateFiles =
-              eqCands ++ dvCands.filterNot(f => eqPaths(f.path))
-            if (candidateFiles.isEmpty) return row(trig = true, 0, 0L, 0)
-            val candidates = candidateFiles.map(_.path)
-            val candSet = candidates.toSet
-            val fqn = s"$catName.${input.getUTF8String(0)}"
-            import org.apache.spark.sql.functions.{col => fcol}
-            // scan ONLY the predating files (file-exact IN pruning);
-            // reading them resolves dv + record liveness task-side
-            val base = spark.table(fqn)
-              .where(fcol(LakeTable.FileColumn).isin(candidates: _*))
-            val perFile = math.max(1L, LakeTable.targetFileBytes(snap.props))
-            val bytes = candidateFiles.map(_.bytes).sum
-            val target = math.max(1, math.min(candidates.size,
-              math.ceil(bytes.toDouble / perFile).toInt))
-            val arranged = compactionLayout(base, target, snap.props)
-            val written = swapRewrite(dir, snap,
-              arranged.queryExecution.toRdd, snap.schema,
-              replacedFiles = Some(candSet),
-              sortedBy = snap.props.get("sortBy").toSeq)
-            row(trig = true, written.size, written.map(_.rows).sum,
-              dvCands.size)
-          }
-        }
-      }
+  /** One CALL: the catalog it runs in and its bound arguments. */
+  private final case class Call(catName: String, warehouse: Path, args: InternalRow) {
+    def str(i: Int): String = args.getUTF8String(i).toString
+    def dir(i: Int): Path = resolve(warehouse, str(i))
+  }
 
-      /** SIZE-targeted INCREMENTAL compaction — the small-file problem's
-        * real fix. `compact(n)` rewrites the whole snapshot; this one
-        * bin-packs ONLY files below `target_bytes` (first-fit
-        * decreasing on the log's recorded file sizes), per partition
-        * tuple and spec era, and swaps just those — already-conforming
-        * files keep their paths, stats, and layout untouched. The read
-        * side scans ONLY the candidates: the `_file` IN predicate is
-        * file-exact in [[LakeStats.decide]], so planning prunes every
-        * conforming file before a single task launches. Bins route
-        * through an explicit partitioner (hash would merge bins on
-        * collision), and a declared `sortBy` is restored per bin with
-        * an in-memory sort — safe because a bin is ≤ target_bytes by
-        * construction.
-        */
-      case "compact_size" => new UnboundProcedure {
-        override def name(): String = "compact_size"
-        override def description(): String =
-          "compact_size(table STRING, target_bytes BIGINT): bin-pack files " +
-            "smaller than target_bytes into ~target_bytes files per " +
-            "partition; conforming files are not rewritten"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "compact_size"
-          override def description(): String = "graftlake incremental compaction"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("target_bytes", LongType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val target = math.max(1L, input.getLong(1))
-            val spark = org.apache.spark.sql.SparkSession.active
-            val snap = LakeLog.currentSnapshot(dir).get
-            def sizeOf(f: LakeFile): Long =
-              if (f.bytes > 0L) f.bytes
-              else Files.size(dir.resolve(f.path)) // pre-feature log entry
-            val resultSchema = StructType(Seq(
-              StructField("candidate_files", IntegerType, nullable = false),
-              StructField("skipped_files", IntegerType, nullable = false),
-              StructField("new_files", IntegerType, nullable = false),
-              StructField("rows_rewritten", LongType, nullable = false)))
-            // candidates: per (era, tuple) groups holding ≥2 sub-target
-            // files (one small file alone has nothing to merge with)
-            val groups = snap.files.groupBy(f => (f.specId, f.part)).values.toSeq
-            val plan = groups
-              .map(_.filter(f => sizeOf(f) < target))
-              .filter(_.size >= 2)
-              .sortBy(_.head.path) // deterministic bin numbering
-            if (plan.isEmpty)
-              return out(resultSchema, Seq(new GenericInternalRow(
-                Array[Any](0, snap.files.size, 0, 0L))))
-            // first-fit decreasing bin pack within each group
-            val fileBin = Seq.newBuilder[(String, Int)]
-            var nBins = 0
-            plan.foreach { group =>
-              val bins = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-              group.sortBy(f => (-sizeOf(f), f.path)).foreach { f =>
-                val sz = sizeOf(f)
-                bins.indexWhere(_._2 + sz <= target) match {
-                  case -1 =>
-                    bins += ((nBins, sz)); fileBin += f.path -> nBins; nBins += 1
-                  case i =>
-                    fileBin += f.path -> bins(i)._1
-                    bins(i) = (bins(i)._1, bins(i)._2 + sz)
-                }
-              }
-            }
-            val binByPath = fileBin.result()
-            val candidates = binByPath.map(_._1)
-            val fqn = s"$catName.${input.getUTF8String(0)}"
-            import org.apache.spark.sql.functions.{broadcast, col => fcol}
-            // scan ONLY the candidates (static _file IN pruning), route
-            // each row to its file's bin via a broadcast map join
-            val binDf = spark.createDataFrame(binByPath).toDF("__f", "__bin")
-            val projected = spark.table(fqn)
-              .where(fcol(LakeTable.FileColumn).isin(candidates: _*))
-              .join(broadcast(binDf), fcol(LakeTable.FileColumn) === fcol("__f"))
-              .select((Seq(fcol("__bin")) ++
-                snap.schema.fieldNames.toSeq.map(fcol(_))): _*)
-            val writeSchema = projected.schema
-            val sortIdx = snap.props.get("sortBy")
-              .map(c => (snap.schema.fieldIndex(c) + 1, snap.schema(c).dataType))
-            val routed = projected.queryExecution.toRdd
-              .mapPartitions(_.map(r => (r.getInt(0), r.copy())))
-              .partitionBy(LakeBinPartitioner(math.max(1, nBins)))
-              .map(_._2)
-            val arranged = sortIdx.fold(routed) { case (i, dt) =>
-              // top-level sorter: a closure here would drag the
-              // procedure's anon class into the task (not serializable)
-              routed.mapPartitions(LakeBinSorter(i, dt))
-            }
-            val written = swapRewrite(dir, snap, arranged, writeSchema,
-              replacedFiles = Some(candidates.toSet),
-              sortedBy = snap.props.get("sortBy").toSeq)
-            out(resultSchema, Seq(new GenericInternalRow(Array[Any](
-              candidates.size, snap.files.size - candidates.size,
-              written.size, written.map(_.rows).sum))))
-          }
-        }
-      }
+  private val procedures: Seq[Proc] = Seq(
+    Proc("compact",
+      "compact(table STRING, target_files INT): rewrite live files into target_files files",
+      Seq("table" -> StringType, "target_files" -> IntegerType), compact),
+    Proc("compact_size",
+      "compact_size(table STRING, target_bytes BIGINT): bin-pack files " +
+        "smaller than target_bytes into ~target_bytes files per " +
+        "partition; conforming files are not rewritten",
+      Seq("table" -> StringType, "target_bytes" -> LongType), compactSize),
+    Proc("compact_where",
+      "compact_where(table STRING, where STRING, target_files INT): " +
+        "compact only the identity partitions matching the predicate",
+      Seq("table" -> StringType, "where" -> StringType, "target_files" -> IntegerType), compactWhere),
+    Proc("zorder",
+      "zorder(table STRING, col_x STRING, col_y STRING, target_files INT): " +
+        "rewrite live files in z-order of two integral columns",
+      Seq("table" -> StringType, "col_x" -> StringType, "col_y" -> StringType, "target_files" -> IntegerType), zorder),
+    Proc("zorder_where",
+      "zorder_where(table STRING, where STRING, col_x STRING, " +
+        "col_y STRING, target_files INT): z-order only the " +
+        "partitions matching the predicate",
+      Seq("table" -> StringType, "where" -> StringType, "col_x" -> StringType, "col_y" -> StringType, "target_files" -> IntegerType), zorderWhere),
+    Proc("vacuum",
+      "vacuum(table STRING, retain_last INT): drop data files + log versions outside the retention window",
+      Seq("table" -> StringType, "retain_last" -> IntegerType), vacuum),
+    Proc("maintain",
+      "maintain(table STRING): resolve the equality-record / delete-vector " +
+        "backlogs once compact_when_eq_records / compact_when_dv_pct are " +
+        "reached; no-op below the thresholds",
+      Seq("table" -> StringType), maintain),
+    Proc("history",
+      "history(table STRING): one row per retained log version",
+      Seq("table" -> StringType), history),
+    Proc("evolve_partitioning",
+      "evolve_partitioning(table STRING, spec STRING): make spec " +
+        "('col', 'bucket(n, col)', comma-separated; '' = unpartitioned) " +
+        "the current partition spec — metadata-only, existing files " +
+        "keep their write-time spec",
+      Seq("table" -> StringType, "spec" -> StringType), evolvePartitioning),
+    Proc("tag",
+      "tag(table STRING, name STRING, version BIGINT): immutable named ref (-1 = head)",
+      Seq("table" -> StringType, "name" -> StringType, "version" -> LongType), tag),
+    Proc("branch",
+      "branch(table STRING, name STRING): open the staging branch (pins the default view)",
+      Seq("table" -> StringType, "name" -> StringType), branch),
+    Proc("publish",
+      "publish(table STRING, name STRING): fast-forward the default view to the branch head",
+      Seq("table" -> StringType, "name" -> StringType), publish),
+    Proc("drop_ref",
+      "drop_ref(table STRING, name STRING): remove a named ref",
+      Seq("table" -> StringType, "name" -> StringType), dropRef),
+    Proc("rollback",
+      "rollback(table STRING, version BIGINT): commit a new version restoring the table to `version`",
+      Seq("table" -> StringType, "version" -> LongType), rollback),
+    Proc("clone",
+      "clone(source STRING, target STRING, version BIGINT): zero-copy shallow clone (-1 = head)",
+      Seq("source" -> StringType, "target" -> StringType, "version" -> LongType), cloneTable),
+    Proc("health",
+      "health(table STRING, deep BOOLEAN): log integrity probe; " +
+        "deep also stats every live file",
+      Seq("table" -> StringType, "deep" -> BooleanType), health))
 
-      /** PARTITION-SCOPED compaction — the 100 TB maintenance shape:
-        * `OPTIMIZE ... WHERE` compacts yesterday's partition, never
-        * the table. The predicate evaluates over the table's PARTITION
-        * TUPLES (read from the log — zero data IO to plan), selected
-        * tuples' current-era files rewrite into ≤ 1 file per tuple
-        * (the task-side writer splits by tuple; `sortBy` is restored
-        * by the arrangement), and the swap commit replaces exactly
-        * those files — untouched partitions keep their paths, stats,
-        * and layout byte-identical.
-        *
-        * Identity columns take ANY SQL predicate (evaluated over the
-        * distinct tuples, source-typed). A `trunc(n, col)` TIME-BUCKET
-        * column takes conjunctions of simple comparisons on the SOURCE
-        * column (`col < X`, `col >= X`, `col = X`, `BETWEEN`, `IN`) —
-        * converted to bucket-ordinal ranges with the transform's own
-        * floorDiv math. Semantics: a bucket is selected when its value
-        * range INTERSECTS the predicate — partial buckets compact
-        * WHOLE (compaction is content-neutral, so rewriting the
-        * enclosing bucket of a mid-bucket bound is safe; refusing
-        * would make scripted "OPTIMIZE yesterday" brittle). Anything
-        * else on a trunc/bucket column, or a predicate naming a
-        * non-partition column, fails loudly; old-era files (pre
-        * partition-evolution) don't participate — their tuples aren't
-        * comparable under the current spec.
-        */
-      case "compact_where" => new UnboundProcedure {
-        override def name(): String = "compact_where"
-        override def description(): String =
-          "compact_where(table STRING, where STRING, target_files INT): " +
-            "compact only the identity partitions matching the predicate"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "compact_where"
-          override def description(): String = "graftlake partition-scoped compaction"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("where", StringType).build(),
-            ProcedureParameter.in("target_files", IntegerType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val where = input.getUTF8String(1).toString
-            val target = math.max(1, input.getInt(2))
-            val spark = org.apache.spark.sql.SparkSession.active
-            val snap = LakeLog.currentSnapshot(dir).get
-            val spec = LakePartitioning.decode(snap.props)
-            val resultSchema = StructType(Seq(
-              StructField("partitions_selected", IntegerType, nullable = false),
-              StructField("files_before", IntegerType, nullable = false),
-              StructField("files_after", IntegerType, nullable = false),
-              StructField("rows_rewritten", LongType, nullable = false)))
-            val (selectedTuples, candidateFiles) =
-              selectPartitions(spark, snap, where)
-            val candidates = candidateFiles.map(_.path)
-            if (candidates.isEmpty)
-              return out(resultSchema, Seq(new GenericInternalRow(
-                Array[Any](selectedTuples.size, 0, 0, 0L))))
-            val fqn = s"$catName.${input.getUTF8String(0)}"
-            import org.apache.spark.sql.functions.{col => fcol, expr => fexpr}
-            // scan ONLY the candidates (file-exact _file IN pruning);
-            // the writer splits per tuple, so repartitioning on the
-            // tuple sources yields one file per selected tuple per
-            // task that sees it. Trunc fields shuffle on the bucket
-            // ORDINAL (exact integer floorDiv spelling — `div` on an
-            // exact multiple), co-locating each whole time bucket.
-            val shuffleKeys = spec.map {
-              case LakePartitioning.Identity(c) => fcol(c)
-              case LakePartitioning.Trunc(c, n) =>
-                fexpr(s"($c - ((($c % $n) + $n) % $n)) div $n")
-              case LakePartitioning.Bucket(c, _) => fcol(c)
-            }
-            val base = spark.table(fqn)
-              .where(fcol(LakeTable.FileColumn).isin(candidates: _*))
-              .repartition(target, shuffleKeys: _*)
-            val arranged = snap.props.get("sortBy")
-              .map(s => base.sortWithinPartitions(fcol(s))).getOrElse(base)
-              .select(snap.schema.fieldNames.toSeq.map(fcol(_)): _*)
-            val written = swapRewrite(dir, snap,
-              arranged.queryExecution.toRdd, snap.schema,
-              replacedFiles = Some(candidates.toSet),
-              sortedBy = snap.props.get("sortBy").toSeq)
-            out(resultSchema, Seq(new GenericInternalRow(Array[Any](
-              selectedTuples.size, candidates.size, written.size,
-              written.map(_.rows).sum))))
-          }
-        }
-      }
+  val Names: Array[String] = procedures.map(_.name).toArray
 
-      /** Multi-dimensional CLUSTERING: rewrite the live rows in Morton
-        * (z-curve) order of two integral columns, quantized onto the
-        * full 16-bit space from their observed domain
-        * ([[graft.operators.Layout]] — the same interleave the layout
-        * queries z01–z03 verify against DuckDB). Each output file then
-        * advertises a NARROW rectangle in BOTH dimensions in its
-        * footer stats, so 2-dim range predicates skip files the way a
-        * 1-dim sort only allows for its own column. Content-neutral by
-        * construction — the same swap commit as compaction.
-        */
-      case "zorder" => new UnboundProcedure {
-        override def name(): String = "zorder"
-        override def description(): String =
-          "zorder(table STRING, col_x STRING, col_y STRING, target_files INT): " +
-            "rewrite live files in z-order of two integral columns"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "zorder"
-          override def description(): String = "graftlake z-order clustering"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("col_x", StringType).build(),
-            ProcedureParameter.in("col_y", StringType).build(),
-            ProcedureParameter.in("target_files", IntegerType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val cx = input.getUTF8String(1).toString
-            val cy = input.getUTF8String(2).toString
-            val target = math.max(1, input.getInt(3))
-            val spark = org.apache.spark.sql.SparkSession.active
-            val snap = LakeLog.currentSnapshot(dir).get
-            val fqn = s"$catName.${input.getUTF8String(0)}"
-            val (nb, na, rows) = zorderRewrite(spark, fqn, dir, snap,
-              snap.files, cx, cy, target)
-            out(rewriteResultSchema,
-              Seq(new GenericInternalRow(Array[Any](nb, na, rows))))
-          }
-        }
-      }
+  private val byName: Map[String, Proc] = procedures.map(p => p.name -> p).toMap
 
-      /** Partition-scoped z-order — the time-bucket layout's OTHER
-        * maintenance op: `zorder_where('t', 'ts >= a AND ts < b', x,
-        * y, n)` clusters exactly yesterday's bucket. Selection is
-        * [[selectPartitions]] (identity SQL + trunc source-column
-        * ranges, log-only); the rewrite is the same incremental
-        * interval sweep as `zorder`, scoped to the selected tuples'
-        * files — untouched buckets keep their paths, and already-
-        * conforming files inside the scope keep theirs too.
-        */
-      case "zorder_where" => new UnboundProcedure {
-        override def name(): String = "zorder_where"
-        override def description(): String =
-          "zorder_where(table STRING, where STRING, col_x STRING, " +
-            "col_y STRING, target_files INT): z-order only the " +
-            "partitions matching the predicate"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "zorder_where"
-          override def description(): String =
-            "graftlake partition-scoped z-order clustering"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("where", StringType).build(),
-            ProcedureParameter.in("col_x", StringType).build(),
-            ProcedureParameter.in("col_y", StringType).build(),
-            ProcedureParameter.in("target_files", IntegerType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val where = input.getUTF8String(1).toString
-            val cx = input.getUTF8String(2).toString
-            val cy = input.getUTF8String(3).toString
-            val target = math.max(1, input.getInt(4))
-            val spark = org.apache.spark.sql.SparkSession.active
-            val snap = LakeLog.currentSnapshot(dir).get
-            val resultSchema = StructType(
-              StructField("partitions_selected", IntegerType, nullable = false)
-                +: rewriteResultSchema.fields.toSeq)
-            val (selected, scope) = selectPartitions(spark, snap, where)
-            val fqn = s"$catName.${input.getUTF8String(0)}"
-            val (nb, na, rows) =
-              zorderRewrite(spark, fqn, dir, snap, scope, cx, cy, target)
-            out(resultSchema, Seq(new GenericInternalRow(
-              Array[Any](selected.size, nb, na, rows))))
-          }
-        }
+  def load(name: String, catName: String, warehouse: Path): UnboundProcedure = {
+    val p = byName(name)
+    new UnboundProcedure {
+      override def name(): String = p.name
+      override def description(): String = p.doc
+      override def bind(input: StructType): BoundProcedure = new BoundProcedure {
+        override def name(): String = p.name
+        override def description(): String = p.doc
+        override def isDeterministic: Boolean = false
+        override def parameters(): Array[ProcedureParameter] =
+          p.params.map { case (n, t) => ProcedureParameter.in(n, t).build() }.toArray
+        override def call(args: InternalRow): java.util.Iterator[Scan] =
+          p.body(Call(catName, warehouse, args))
       }
-
-      // refs + lifecycle procedures continue in [[loadRefs]] — the
-      // split keeps this match readable around the shared rewrite
-      // helpers
-      case other => loadRefs(other, warehouse)
     }
+  }
+
+  private def compact(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val target = math.max(1, c.args.getInt(1))
+    val spark = org.apache.spark.sql.SparkSession.active
+    val snap = LakeLog.currentSnapshot(dir).get
+    val fqn = s"${c.catName}.${c.str(0)}"
+    // distributed rewrite: plain table read → repartition →
+    // the SAME task-side writers the write path uses
+    val arranged = compactionLayout(spark.table(fqn), target, snap.props)
+    val written = swapRewrite(dir, snap,
+      arranged.queryExecution.toRdd, snap.schema,
+      sortedBy = snap.props.get("sortBy").toSeq)
+    one(rewriteResultSchema, snap.files.size, written.size, written.map(_.rows).sum)
+  }
+
+  /** MERGE-ON-READ backlog maintenance policy. `maintain(table)`
+    * reads two operator thresholds (validated at CREATE/ALTER) and
+    * resolves whichever backlog reached its line, in ONE rewrite:
+    *
+    *  - `compact_when_eq_records = N`: once the LIVE equality
+    *    record count reaches N, rewrites exactly the files any
+    *    record predates (reading them applies dvs + the anti-join,
+    *    so the rebirths come out clean at the new version); the
+    *    commit's auto-prune then drops the whole record set — the
+    *    next scan plans zero eq key columns.
+    *  - `compact_when_dv_pct = P`: any file whose delete vector
+    *    covers ≥ P% of its rows rewrites clean — the per-read
+    *    position-skip tax (and the dead bytes) are reclaimed file
+    *    by file, never table-wide.
+    *
+    * Below both lines (or without the properties) the call is a
+    * NO-OP, so operators script it after every ingest cycle and
+    * pay rewrites only when a read tax would otherwise compound.
+    * Files outside both candidate sets keep their paths, stats,
+    * and layout untouched.
+    */
+  private def maintain(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val spark = org.apache.spark.sql.SparkSession.active
+    val snap = LakeLog.currentSnapshot(dir).get
+    val resultSchema = StructType(Seq(
+      StructField("triggered", BooleanType, nullable = false),
+      StructField("eq_records", IntegerType, nullable = false),
+      StructField("threshold", LongType, nullable = true),
+      StructField("files_rewritten", IntegerType, nullable = false),
+      StructField("rows_rewritten", LongType, nullable = false),
+      StructField("dv_files", IntegerType, nullable = false)))
+    val threshold = snap.props.get("compact_when_eq_records")
+      .flatMap(_.toLongOption)
+    val dvPct = snap.props.get("compact_when_dv_pct")
+      .flatMap(_.toLongOption)
+    val records = snap.eqdels.size
+    def row(trig: Boolean, nf: Int, nr: Long, dvf: Int) =
+      one(resultSchema, trig, records, threshold.map(Long.box).orNull, nf, nr, dvf)
+    val eqFire = threshold.exists(records >= _)
+    // every file ANY record predates must be reborn, or the
+    // commit's prune rule keeps the records alive (a live
+    // record implies at least one such file exists)
+    val eqCands =
+      if (!eqFire) Seq.empty[LakeFile]
+      else {
+        val maxSeq = snap.eqdels.map(_.seq).max
+        snap.files.filter(_.seq < maxSeq)
+      }
+    val dvCands = dvPct.map(p => snap.files.filter(f =>
+      f.dvRows > 0L && f.dvRows * 100L >= p * f.rows))
+      .getOrElse(Seq.empty)
+    if (!eqFire && dvCands.isEmpty) return row(trig = false, 0, 0L, 0)
+    val eqPaths = eqCands.map(_.path).toSet
+    val candidateFiles =
+      eqCands ++ dvCands.filterNot(f => eqPaths(f.path))
+    if (candidateFiles.isEmpty) return row(trig = true, 0, 0L, 0)
+    val candidates = candidateFiles.map(_.path)
+    val candSet = candidates.toSet
+    val fqn = s"${c.catName}.${c.str(0)}"
+    import org.apache.spark.sql.functions.{col => fcol}
+    // scan ONLY the predating files (file-exact IN pruning);
+    // reading them resolves dv + record liveness task-side
+    val base = spark.table(fqn)
+      .where(fcol(LakeTable.FileColumn).isin(candidates: _*))
+    val perFile = math.max(1L, LakeTable.targetFileBytes(snap.props))
+    val bytes = candidateFiles.map(_.bytes).sum
+    val target = math.max(1, math.min(candidates.size,
+      math.ceil(bytes.toDouble / perFile).toInt))
+    val arranged = compactionLayout(base, target, snap.props)
+    val written = swapRewrite(dir, snap,
+      arranged.queryExecution.toRdd, snap.schema,
+      replacedFiles = Some(candSet),
+      sortedBy = snap.props.get("sortBy").toSeq)
+    row(trig = true, written.size, written.map(_.rows).sum,
+      dvCands.size)
+  }
+
+  /** SIZE-targeted INCREMENTAL compaction — the small-file problem's
+    * real fix. `compact(n)` rewrites the whole snapshot; this one
+    * bin-packs ONLY files below `target_bytes` (first-fit
+    * decreasing on the log's recorded file sizes), per partition
+    * tuple and spec era, and swaps just those — already-conforming
+    * files keep their paths, stats, and layout untouched. The read
+    * side scans ONLY the candidates: the `_file` IN predicate is
+    * file-exact in [[LakeStats.decide]], so planning prunes every
+    * conforming file before a single task launches. Bins route
+    * through an explicit partitioner (hash would merge bins on
+    * collision), and a declared `sortBy` is restored per bin with
+    * an in-memory sort — safe because a bin is ≤ target_bytes by
+    * construction.
+    */
+  private def compactSize(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val target = math.max(1L, c.args.getLong(1))
+    val spark = org.apache.spark.sql.SparkSession.active
+    val snap = LakeLog.currentSnapshot(dir).get
+    def sizeOf(f: LakeFile): Long =
+      if (f.bytes > 0L) f.bytes
+      else Files.size(dir.resolve(f.path)) // pre-feature log entry
+    val resultSchema = columns("candidate_files" -> IntegerType,
+      "skipped_files" -> IntegerType, "new_files" -> IntegerType, "rows_rewritten" -> LongType)
+    // candidates: per (era, tuple) groups holding ≥2 sub-target
+    // files (one small file alone has nothing to merge with)
+    val groups = snap.files.groupBy(f => (f.specId, f.part)).values.toSeq
+    val plan = groups
+      .map(_.filter(f => sizeOf(f) < target))
+      .filter(_.size >= 2)
+      .sortBy(_.head.path) // deterministic bin numbering
+    if (plan.isEmpty)
+      return one(resultSchema, 0, snap.files.size, 0, 0L)
+    // first-fit decreasing bin pack within each group
+    val fileBin = Seq.newBuilder[(String, Int)]
+    var nBins = 0
+    plan.foreach { group =>
+      val bins = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+      group.sortBy(f => (-sizeOf(f), f.path)).foreach { f =>
+        val sz = sizeOf(f)
+        bins.indexWhere(_._2 + sz <= target) match {
+          case -1 =>
+            bins += ((nBins, sz)); fileBin += f.path -> nBins; nBins += 1
+          case i =>
+            fileBin += f.path -> bins(i)._1
+            bins(i) = (bins(i)._1, bins(i)._2 + sz)
+        }
+      }
+    }
+    val binByPath = fileBin.result()
+    val candidates = binByPath.map(_._1)
+    val fqn = s"${c.catName}.${c.str(0)}"
+    import org.apache.spark.sql.functions.{broadcast, col => fcol}
+    // scan ONLY the candidates (static _file IN pruning), route
+    // each row to its file's bin via a broadcast map join
+    val binDf = spark.createDataFrame(binByPath).toDF("__f", "__bin")
+    val projected = spark.table(fqn)
+      .where(fcol(LakeTable.FileColumn).isin(candidates: _*))
+      .join(broadcast(binDf), fcol(LakeTable.FileColumn) === fcol("__f"))
+      .select((Seq(fcol("__bin")) ++
+        snap.schema.fieldNames.toSeq.map(fcol(_))): _*)
+    val writeSchema = projected.schema
+    val sortIdx = snap.props.get("sortBy")
+      .map(c => (snap.schema.fieldIndex(c) + 1, snap.schema(c).dataType))
+    val routed = projected.queryExecution.toRdd
+      .mapPartitions(_.map(r => (r.getInt(0), r.copy())))
+      .partitionBy(LakeBinPartitioner(math.max(1, nBins)))
+      .map(_._2)
+    val arranged = sortIdx.fold(routed) { case (i, dt) =>
+      // top-level sorter: a closure here would drag the
+      // procedure's anon class into the task (not serializable)
+      routed.mapPartitions(LakeBinSorter(i, dt))
+    }
+    val written = swapRewrite(dir, snap, arranged, writeSchema,
+      replacedFiles = Some(candidates.toSet),
+      sortedBy = snap.props.get("sortBy").toSeq)
+    one(resultSchema, candidates.size, snap.files.size - candidates.size,
+      written.size, written.map(_.rows).sum)
+  }
+
+  /** PARTITION-SCOPED compaction — the 100 TB maintenance shape:
+    * `OPTIMIZE ... WHERE` compacts yesterday's partition, never
+    * the table. The predicate evaluates over the table's PARTITION
+    * TUPLES (read from the log — zero data IO to plan), selected
+    * tuples' current-era files rewrite into ≤ 1 file per tuple
+    * (the task-side writer splits by tuple; `sortBy` is restored
+    * by the arrangement), and the swap commit replaces exactly
+    * those files — untouched partitions keep their paths, stats,
+    * and layout byte-identical.
+    *
+    * Identity columns take ANY SQL predicate (evaluated over the
+    * distinct tuples, source-typed). A `trunc(n, col)` TIME-BUCKET
+    * column takes conjunctions of simple comparisons on the SOURCE
+    * column (`col < X`, `col >= X`, `col = X`, `BETWEEN`, `IN`) —
+    * converted to bucket-ordinal ranges with the transform's own
+    * floorDiv math. Semantics: a bucket is selected when its value
+    * range INTERSECTS the predicate — partial buckets compact
+    * WHOLE (compaction is content-neutral, so rewriting the
+    * enclosing bucket of a mid-bucket bound is safe; refusing
+    * would make scripted "OPTIMIZE yesterday" brittle). Anything
+    * else on a trunc/bucket column, or a predicate naming a
+    * non-partition column, fails loudly; old-era files (pre
+    * partition-evolution) don't participate — their tuples aren't
+    * comparable under the current spec.
+    */
+  private def compactWhere(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val where = c.str(1)
+    val target = math.max(1, c.args.getInt(2))
+    val spark = org.apache.spark.sql.SparkSession.active
+    val snap = LakeLog.currentSnapshot(dir).get
+    val spec = LakePartitioning.decode(snap.props)
+    val (selectedTuples, candidateFiles) =
+      selectPartitions(spark, snap, where)
+    val candidates = candidateFiles.map(_.path)
+    if (candidates.isEmpty)
+      return one(scopedRewriteSchema, selectedTuples.size, 0, 0, 0L)
+    val fqn = s"${c.catName}.${c.str(0)}"
+    import org.apache.spark.sql.functions.{col => fcol, expr => fexpr}
+    // scan ONLY the candidates (file-exact _file IN pruning);
+    // the writer splits per tuple, so repartitioning on the
+    // tuple sources yields one file per selected tuple per
+    // task that sees it. Trunc fields shuffle on the bucket
+    // ORDINAL (exact integer floorDiv spelling — `div` on an
+    // exact multiple), co-locating each whole time bucket.
+    val shuffleKeys = spec.map {
+      case LakePartitioning.Identity(c) => fcol(c)
+      case LakePartitioning.Trunc(c, n) =>
+        fexpr(s"($c - ((($c % $n) + $n) % $n)) div $n")
+      case LakePartitioning.Bucket(c, _) => fcol(c)
+    }
+    val base = spark.table(fqn)
+      .where(fcol(LakeTable.FileColumn).isin(candidates: _*))
+      .repartition(target, shuffleKeys: _*)
+    val arranged = snap.props.get("sortBy")
+      .map(s => base.sortWithinPartitions(fcol(s))).getOrElse(base)
+      .select(snap.schema.fieldNames.toSeq.map(fcol(_)): _*)
+    val written = swapRewrite(dir, snap,
+      arranged.queryExecution.toRdd, snap.schema,
+      replacedFiles = Some(candidates.toSet),
+      sortedBy = snap.props.get("sortBy").toSeq)
+    one(scopedRewriteSchema, selectedTuples.size, candidates.size, written.size,
+      written.map(_.rows).sum)
+  }
+
+  /** Multi-dimensional CLUSTERING: rewrite the live rows in Morton
+    * (z-curve) order of two integral columns, quantized onto the
+    * full 16-bit space from their observed domain
+    * ([[graft.operators.Layout]] — the same interleave the layout
+    * queries z01–z03 verify against DuckDB). Each output file then
+    * advertises a NARROW rectangle in BOTH dimensions in its
+    * footer stats, so 2-dim range predicates skip files the way a
+    * 1-dim sort only allows for its own column. Content-neutral by
+    * construction — the same swap commit as compaction.
+    */
+  private def zorder(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val cx = c.str(1)
+    val cy = c.str(2)
+    val target = math.max(1, c.args.getInt(3))
+    val spark = org.apache.spark.sql.SparkSession.active
+    val snap = LakeLog.currentSnapshot(dir).get
+    val fqn = s"${c.catName}.${c.str(0)}"
+    val (nb, na, rows) = zorderRewrite(spark, fqn, dir, snap,
+      snap.files, cx, cy, target)
+    one(rewriteResultSchema, nb, na, rows)
+  }
+
+  /** Partition-scoped z-order — the time-bucket layout's OTHER
+    * maintenance op: `zorder_where('t', 'ts >= a AND ts < b', x,
+    * y, n)` clusters exactly yesterday's bucket. Selection is
+    * [[selectPartitions]] (identity SQL + trunc source-column
+    * ranges, log-only); the rewrite is the same incremental
+    * interval sweep as `zorder`, scoped to the selected tuples'
+    * files — untouched buckets keep their paths, and already-
+    * conforming files inside the scope keep theirs too.
+    */
+  private def zorderWhere(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val where = c.str(1)
+    val cx = c.str(2)
+    val cy = c.str(3)
+    val target = math.max(1, c.args.getInt(4))
+    val spark = org.apache.spark.sql.SparkSession.active
+    val snap = LakeLog.currentSnapshot(dir).get
+    val (selected, scope) = selectPartitions(spark, snap, where)
+    val fqn = s"${c.catName}.${c.str(0)}"
+    val (nb, na, rows) =
+      zorderRewrite(spark, fqn, dir, snap, scope, cx, cy, target)
+    one(scopedRewriteSchema, selected.size, nb, na, rows)
+  }
+
+  /** Operational INTEGRITY probe — what a fleet health-check calls
+    * before trusting a table (or after an incident). SHALLOW
+    * (deep=false) reads only the log: the durable
+    * checkpoint-failure marker, ORPHANED checkpoint part files
+    * (manifest vacuumed first, parts left — reclaimed only below
+    * the next vacuum floor), and refs pointing at versions no
+    * longer reconstructible (vacuum is supposed to keep every
+    * tagged version alive — nonzero means damage). DEEP also
+    * verifies the HEAD snapshot's physical closure: every live
+    * entry's data file exists with the recorded size, its delete
+    * vector exists, its bloom sidecar exists — O(files) stat
+    * calls, opt-in by design, and DISTRIBUTED: one Spark task per
+    * census chunk (the `__files` fold), so a 10⁸-file table's
+    * walk is parallel tasks, not hours of one-JVM syscalls.
+    */
+  private def health(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val deep = c.args.getBoolean(1)
+    val head = LakeLog.currentVersion(dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"health: ${c.str(0)} does not exist"))
+    val marker = LakeLog.lastCheckpointFailure(dir)
+    // orphaned parts: a part file whose version has no manifest
+    val logDir = dir.resolve("_log")
+    val PartName = """c(\d{8})\.p\d{4}\.json""".r
+    import scala.jdk.CollectionConverters._
+    val orphanParts = scala.util.Using.resource(Files.list(logDir)) {
+      _.iterator().asScala.map(_.getFileName.toString).count {
+        case PartName(v) =>
+          LakeLog.checkpointParts(dir, v.toLong) == 0
+        case _ => false
+      }
+    }
+    // refs must stay reconstructible (branches resolve to the
+    // head, which trivially is)
+    val staleRefs = LakeLog.listRefs(dir).count {
+      case (_, _, "branch") => false
+      case (_, v, _) => LakeLog.snapshotAt(dir, v).isEmpty
+    }
+    var missingData = 0
+    var sizeMismatch = 0
+    var missingDv = 0
+    var missingBloom = 0
+    var missingEq = 0
+    // equality-delete BACKLOG (not damage — every read pays the
+    // anti-join until compaction resolves it; the operator's
+    // when-to-compact signal): record count + total keys. O(1)
+    // from the lazy snapshot header.
+    val headSnap = LakeLog.currentSnapshot(dir).get
+    val eqRecords = headSnap.eqdels.size
+    val eqKeys = headSnap.eqdels.map(_.n).sum
+    headSnap.eqdels.foreach { e =>
+      if (!Files.isRegularFile(dir.resolve(e.ref))) missingEq += 1
+    }
+    if (deep) {
+      // DISTRIBUTED physical-closure walk: one task per census
+      // chunk (checkpoint part / delta) via the same chunk +
+      // kill-set fold the `__files` census scans with. The
+      // driver plans from the O(1) manifest + O(changes)
+      // deltas and sums per-chunk counts — never a per-file
+      // syscall loop. Fallback (pruned delta broke the chunk
+      // fold): the snapshot-fold walk, as before.
+      LakeMetaTables.censusChunks(dir, head) match {
+        case Some((chunks, cpKill)) if chunks.nonEmpty =>
+          val spark = org.apache.spark.sql.SparkSession.active
+          val (md, sm, mdv, mb) = spark.sparkContext
+            .parallelize(chunks, chunks.size)
+            .map(c => LakeHealth.checkChunk(c, cpKill))
+            .fold((0, 0, 0, 0)) { (a, b) =>
+              (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4)
+            }
+          missingData = md; sizeMismatch = sm
+          missingDv = mdv; missingBloom = mb
+        case _ =>
+          headSnap.files.foreach { f =>
+            val p = dir.resolve(f.path)
+            if (!Files.isRegularFile(p)) missingData += 1
+            else if (f.bytes > 0L && Files.size(p) != f.bytes)
+              sizeMismatch += 1
+            f.dv.foreach { d =>
+              if (!Files.isRegularFile(dir.resolve(d))) missingDv += 1
+            }
+            if (f.bloomSc.nonEmpty &&
+                !Files.isRegularFile(dir.resolve(f.path + ".bloom")))
+              missingBloom += 1
+          }
+      }
+    }
+    val ok = marker.isEmpty && orphanParts == 0 && staleRefs == 0 &&
+      missingData == 0 && sizeMismatch == 0 && missingDv == 0 &&
+      missingBloom == 0 && missingEq == 0
+    one(StructType(Seq(
+      StructField("ok", BooleanType, nullable = false),
+      StructField("head_version", LongType, nullable = false),
+      StructField("checkpoint_failure", StringType, nullable = true)) ++
+      columns("orphan_part_files" -> IntegerType, "stale_refs" -> IntegerType,
+        "missing_data_files" -> IntegerType, "size_mismatches" -> IntegerType,
+        "missing_delete_vectors" -> IntegerType, "missing_bloom_sidecars" -> IntegerType,
+        "eq_delete_records" -> IntegerType, "eq_delete_keys" -> LongType,
+        "missing_eq_sidecars" -> IntegerType).fields),
+      ok, head, marker.orNull, orphanParts, staleRefs, missingData, sizeMismatch,
+      missingDv, missingBloom, eqRecords, eqKeys, missingEq)
+  }
+
+  /** Named REFS over log versions — the write-audit-publish
+    * pattern on machinery (time travel, snapshot pinning) that
+    * already exists:
+    *
+    *   - `tag(table, name, version)` — immutable pin; `-1` tags
+    *     the head. Readable as `VERSION AS OF '<name>'`; vacuum
+    *     keeps tagged versions reconstructible.
+    *   - `branch(table, name)` — open the staging branch: pins the
+    *     DEFAULT view (`main` ref, atomic create-if-absent — the
+    *     exclusivity lock) at the head; commits landing after land
+    *     "on the branch": plain reads keep seeing the pinned view,
+    *     `VERSION AS OF '<name>'` audits the branch head.
+    *   - `publish(table, name)` — fast-forward: one atomic unlink
+    *     of the main ref flips every reader to the head; the
+    *     branch marker is then dropped.
+    *   - `drop_ref(table, name)` — remove a tag; dropping `main`
+    *     is the manual fast-forward (abandoning the audit).
+    *
+    * Documented limitation: while a branch is active, row-level
+    * ops (DELETE/UPDATE/MERGE) scan the PINNED view — the
+    * supported pattern is append-audit-publish, mutate after.
+    */
+  private def tag(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val refName = c.str(1)
+    // 'main' is the write-audit-publish pin: a TAG named main
+    // would freeze every default read at its version forever
+    // (loadTable honors the main ref), with no publish to clear
+    // it — reserved for branch()'s pin alone
+    require(refName != "main", "'main' is the reserved pin ref")
+    val head = LakeLog.currentVersion(dir).get
+    val v = if (c.args.getLong(2) < 0L) head else c.args.getLong(2)
+    require(LakeLog.snapshotAt(dir, v).isDefined,
+      s"version $v is not reconstructible (pruned or future)")
+    require(LakeLog.writeRef(dir, refName, v, "tag", replace = false),
+      s"ref '$refName' already exists")
+    one(columns("tag" -> StringType, "version" -> LongType), refName, v)
+  }
+
+  private def branch(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val refName = c.str(1)
+    require(refName != "main", "'main' is the reserved pin ref")
+    require(LakeLog.readRef(dir, refName).forall(_._2 == "branch"),
+      s"ref '$refName' already exists as a tag")
+    val head = LakeLog.currentVersion(dir).get
+    // the main pin is the exclusivity lock: create-if-absent
+    require(LakeLog.writeRef(dir, "main", head, "main", replace = false),
+      "a staging branch is already active (main is pinned)")
+    // replace = true clears a stale marker left by a crashed
+    // publish (marker without a pin is inert)
+    LakeLog.writeRef(dir, refName, head, "branch", replace = true)
+    one(columns("branch" -> StringType, "base_version" -> LongType), refName, head)
+  }
+
+  private def publish(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val refName = c.str(1)
+    require(LakeLog.readRef(dir, refName).exists(_._2 == "branch"),
+      s"'$refName' is not the active staging branch")
+    LakeLog.dropRef(dir, "main") // THE atomic publish point
+    LakeLog.dropRef(dir, refName)
+    // head read AFTER the pin drop: a branch commit landing
+    // between a pre-drop read and the drop would make the
+    // returned version under-report what readers now see
+    val head = LakeLog.currentVersion(dir).get
+    one(columns("published_version" -> LongType), head)
+  }
+
+  private def dropRef(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val refName = c.str(1)
+    val dropped = LakeLog.dropRef(dir, refName)
+    one(columns("dropped" -> BooleanType), dropped)
+  }
+
+  /** SHALLOW clone: one metadata commit whose v0 snapshot
+    * references the source's live data files by ABSOLUTE path
+    * (`Path.resolve` passes absolute entries through
+    * unchanged, so every reader works as-is). Zero bytes copy
+    * at any table size; the clone then evolves independently —
+    * its own writes/dvs land relative under its own dir, and
+    * compaction converges it to self-contained.
+    *
+    * The standard shallow-clone hazard — source vacuum
+    * reclaiming files the clone still references — is closed
+    * by CONTRACT: the clone drops a TAG ref
+    * (`clone-<target>`) on the SOURCE at the cloned version.
+    * Vacuum already keeps every tagged version reconstructible
+    * and its files referenced, so a source vacuum can never
+    * dangle the clone. Release the pin explicitly with
+    * `CALL system.drop_ref` after deep-copying the clone
+    * (CALL system.compact makes it self-contained).
+    */
+  private def cloneTable(c: Call): java.util.Iterator[Scan] = {
+    val srcDir = c.dir(0)
+    val dstDir = c.dir(1)
+    val v0 = c.args.getLong(2)
+    val head = LakeLog.currentVersion(srcDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"clone source ${c.str(0)} does not exist"))
+    val v = if (v0 < 0L) head else v0
+    val src = LakeLog.snapshotAt(srcDir, v).getOrElse(
+      throw new IllegalArgumentException(
+        s"version $v is not reconstructible (pruned or future)"))
+    val dstIdent = Identifier.of(Array.empty, c.str(1))
+    if (LakeLog.currentVersion(dstDir).isDefined)
+      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(dstIdent)
+    // a clone restarts version numbering at 0, so the source's
+    // birth-seq scoping cannot transfer (a future clone commit
+    // would collide with source seqs and wrongly fall in/out of
+    // scope) — refuse; compaction resolves the records first
+    require(src.eqdels.isEmpty,
+      "graftlake: cannot clone a table with live equality " +
+        "deletes — run CALL system.compact on the source first")
+    val absolute = src.files.map { f =>
+      f.copy(
+        path = srcDir.resolve(f.path).toAbsolutePath.toString,
+        dv = f.dv.map(d => srcDir.resolve(d).toAbsolutePath.toString),
+        // REBASE birth seqs: the clone's log restarts at 0, so
+        // source seqs would collide with future clone versions
+        // and FUTURE equality deletes (stamped seq >= 1) would
+        // skip cloned files carrying larger source seqs — rows
+        // would silently escape replacement. 0 = "predates
+        // every record", exactly right for a v0 snapshot.
+        seq = 0L)
+    }
+    // strip txn/epoch watermarks: the clone is a new idempotence scope
+    val props = src.props.filterNot(p =>
+      p._1.startsWith("txn.") || p._1.startsWith("qe."))
+    LakeLog.create(dstDir, dstIdent, LakeSnapshot(0L, src.schema, absolute, props))
+    // pin the cloned version on the SOURCE with a tag: vacuum
+    // keeps tagged versions reconstructible and their files
+    // referenced, so the source can never reclaim data the
+    // clone points at (drop_ref releases after a deep copy).
+    // Each clone gets a FRESH tag — reusing an existing tag
+    // that happens to sit at (v, "tag") would let one drop_ref
+    // silently unpin every other clone of the same name/version.
+    val tagBase = ("clone-" + c.str(1))
+      .map(ch => if (ch.isLetterOrDigit || ch == '-' || ch == '_') ch else '-')
+    var tag = tagBase
+    var k = 1
+    while (!LakeLog.writeRef(srcDir, tag, v, "tag", replace = false)) {
+      k += 1; tag = s"$tagBase-$k"
+    }
+    one(columns("cloned_version" -> LongType, "n_files" -> IntegerType,
+      "n_rows" -> LongType, "pin_tag" -> StringType),
+      v, absolute.size, absolute.map(_.liveRows).sum, tag)
+  }
+
+  /** RESTORE — the bad-write undo button. A rollback is ONE
+    * metadata commit whose successor snapshot is the target
+    * version's state (file list + schema + table props): zero
+    * rows read or written, instant at any table size, and the
+    * reverted-away versions stay time-travelable (nothing is
+    * deleted — vacuum reclaims them later under its own
+    * retention rules, and reconstructibility of the target
+    * implies its files are still referenced, so a restored
+    * snapshot never dangles). Two properties do NOT restore:
+    * the field-id counter (`maxcolid`) and the partition-spec
+    * history — both are append-only along the version chain, and
+    * winding them back would let post-rollback DDL recycle a
+    * column id / spec era still referenced by files alive in
+    * history. The change feed sees the rollback as a normal
+    * commit: remove-only over an append-only history (clean
+    * delete semantics), remove+add when it reverts row-level
+    * mutations (the documented rewrite contract applies); a
+    * dropped equality-delete record narrates as resurrection
+    * inserts over its still-live predating files.
+    */
+  private def rollback(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val v = c.args.getLong(1)
+    val target = LakeLog.snapshotAt(dir, v).getOrElse(
+      throw new IllegalArgumentException(
+        s"version $v is not reconstructible (pruned or future)"))
+    var committed: Long = -1L
+    LakeLog.commitLoop(dir) { cur =>
+      require(v <= cur.version,
+        s"cannot roll back to v$v: head is v${cur.version}")
+      val props = {
+        val maxid = (target.props.get("maxcolid") ++
+          cur.props.get("maxcolid")).map(_.toInt).maxOption
+        // cur's spec history ⊇ target's: append-only chain
+        val specs = cur.props.get(LakePartitioning.SpecsKey)
+          .orElse(target.props.get(LakePartitioning.SpecsKey))
+        target.props ++ maxid.map("maxcolid" -> _.toString) ++
+          specs.map(LakePartitioning.SpecsKey -> _)
+      }
+      val restored =
+        LakeSnapshot(cur.version + 1, target.schema, target.files, props)
+      committed = restored.version
+      // the restore must also carry the TARGET's equality-delete
+      // set (same log numbering, so scoping transfers verbatim)
+      Some(LakeLog.Replace(restored, eqBase = Some(target.eqdels)))
+    }
+    one(columns("restored_version" -> LongType, "new_version" -> LongType,
+      "files" -> IntegerType, "live_rows" -> LongType),
+      v, committed, target.files.size, target.files.map(_.liveRows).sum)
+  }
+
+  private def vacuum(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val retain = math.max(1, c.args.getInt(1))
+    val head = LakeLog.currentVersion(dir).get
+    // refs pin history: every tagged (or main-pinned) version
+    // must stay reconstructible after the prune — the floor
+    // never rises past the oldest pinned ref. Branch refs
+    // resolve to the head and add no constraint.
+    val refFloor = LakeLog.listRefs(dir).collect {
+      case (_, v, kind) if kind != "branch" => v
+    }.minOption
+    val floor = refFloor.foldLeft(
+      math.max(0L, head - retain + 1))(math.min)
+    val retained = (floor to head).flatMap(LakeLog.snapshotAt(dir, _))
+    // a file's bloom SIDECAR lives and dies with the file; an
+    // equality-delete sidecar lives while ANY retained version's
+    // record references it
+    val referenced = retained
+      .flatMap(_.files.flatMap(f => f.path +: (f.dv.toSeq ++
+        (if (f.bloomSc.nonEmpty) Seq(f.path + ".bloom") else Nil)))).toSet ++
+      retained.flatMap(_.eqdels.map(_.ref))
+    // checkpoint the retention floor BEFORE pruning the delta
+    // chain below it — every retained version must stay
+    // reconstructible from (checkpoint, deltas) afterwards
+    retained.find(_.version == floor).foreach(LakeLog.checkpoint(dir, _))
+    // age guard: data files land under final names BEFORE the
+    // log references them, so an unreferenced file newer than
+    // the head version's commit may belong to an IN-FLIGHT
+    // write — deleting it would leave the writer's subsequent
+    // commit dangling. Only reclaim files strictly older than
+    // the head commit (Delta's retention-check shape).
+    val headMtime = Files.getLastModifiedTime(
+      dir.resolve("_log").resolve(f"v$head%08d.json")).toMillis
+    val dataDir = dir.resolve("data")
+    val deletable = scala.util.Using.resource(Files.list(dataDir)) {
+      _.iterator().asScala
+        .filter(p => !referenced.contains("data/" + p.getFileName.toString))
+        .filter(p => Files.getLastModifiedTime(p).toMillis < headMtime)
+        .toSeq
+    }
+    deletable.foreach(Files.delete)
+    val prunedVersions = LakeLog.pruneBelow(dir, floor)
+    one(columns("deleted_data_files" -> IntegerType,
+      "deleted_log_versions" -> IntegerType, "retained_from_version" -> LongType),
+      deletable.size, prunedVersions, floor)
+  }
+
+  /** PARTITION EVOLUTION (Iceberg's headline advantage over Hive
+    * layouts): re-declare how FUTURE files partition without
+    * touching a byte of data. A pure metadata commit appends the
+    * new spec to the table's spec history; every existing file
+    * keeps its write-time spec id, so pruning keeps deciding each
+    * file's tuple under the transforms it was written with, across
+    * eras. SPJ and dynamic partition overwrite require a single
+    * era (compact to converge).
+    */
+  private def evolvePartitioning(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val specStr = c.str(1)
+    var specId = -1
+    LakeLog.commitLoop(dir) { cur =>
+      val next = LakePartitioning.parseSpecSyntax(specStr, cur.schema)
+      if (LakePartitioning.encode(next) ==
+          cur.props.getOrElse(LakePartitioning.PropKey, "")) {
+        specId = LakePartitioning.currentSpecId(cur.props)
+        None // already current: no-op, no version burned
+      } else {
+        val props2 = LakePartitioning.evolve(cur.props, next)
+        specId = LakePartitioning.currentSpecId(props2)
+        Some(LakeLog.Replace(
+          LakeSnapshot(cur.version + 1, cur.schema, cur.files, props2)))
+      }
+    }
+    one(columns("spec_id" -> IntegerType, "spec" -> StringType), specId, specStr)
+  }
+
+  private def history(c: Call): java.util.Iterator[Scan] = {
+    val dir = c.dir(0)
+    val rows0 = LakeLog.historyCensus(dir).map {
+      case (v, _, nFiles, nRows, _) =>
+        new GenericInternalRow(Array[Any](v, nFiles, nRows)): InternalRow
+    }
+    out(columns("version" -> LongType, "n_files" -> IntegerType, "n_rows" -> LongType), rows0)
+  }
 
   /** The incremental z-order rewrite over `scope` (a subset of the
     * snapshot's live files): planned from FOOTER STATS alone — see the
@@ -6790,582 +7165,6 @@ object LakeProcedures {
             (candidates.size, written.size, written.map(_.rows).sum)
   }
 
-  private def loadRefs(name: String, warehouse: Path): UnboundProcedure =
-    name match {
-
-      /** Operational INTEGRITY probe — what a fleet health-check calls
-        * before trusting a table (or after an incident). SHALLOW
-        * (deep=false) reads only the log: the durable
-        * checkpoint-failure marker, ORPHANED checkpoint part files
-        * (manifest vacuumed first, parts left — reclaimed only below
-        * the next vacuum floor), and refs pointing at versions no
-        * longer reconstructible (vacuum is supposed to keep every
-        * tagged version alive — nonzero means damage). DEEP also
-        * verifies the HEAD snapshot's physical closure: every live
-        * entry's data file exists with the recorded size, its delete
-        * vector exists, its bloom sidecar exists — O(files) stat
-        * calls, opt-in by design, and DISTRIBUTED: one Spark task per
-        * census chunk (the `__files` fold), so a 10⁸-file table's
-        * walk is parallel tasks, not hours of driver syscalls.
-        */
-      case "health" => new UnboundProcedure {
-        override def name(): String = "health"
-        override def description(): String =
-          "health(table STRING, deep BOOLEAN): log integrity probe; " +
-            "deep also stats every live file"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "health"
-          override def description(): String = "graftlake integrity probe"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("deep", BooleanType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val deep = input.getBoolean(1)
-            val head = LakeLog.currentVersion(dir).getOrElse(
-              throw new IllegalArgumentException(
-                s"health: ${input.getUTF8String(0)} does not exist"))
-            val marker = LakeLog.lastCheckpointFailure(dir)
-            // orphaned parts: a part file whose version has no manifest
-            val logDir = dir.resolve("_log")
-            val PartName = """c(\d{8})\.p\d{4}\.json""".r
-            import scala.jdk.CollectionConverters._
-            val orphanParts = scala.util.Using.resource(Files.list(logDir)) {
-              _.iterator().asScala.map(_.getFileName.toString).count {
-                case PartName(v) =>
-                  LakeLog.checkpointParts(dir, v.toLong) == 0
-                case _ => false
-              }
-            }
-            // refs must stay reconstructible (branches resolve to the
-            // head, which trivially is)
-            val staleRefs = LakeLog.listRefs(dir).count {
-              case (_, _, "branch") => false
-              case (_, v, _) => LakeLog.snapshotAt(dir, v).isEmpty
-            }
-            var missingData = 0
-            var sizeMismatch = 0
-            var missingDv = 0
-            var missingBloom = 0
-            var missingEq = 0
-            // equality-delete BACKLOG (not damage — every read pays the
-            // anti-join until compaction resolves it; the operator's
-            // when-to-compact signal): record count + total keys. O(1)
-            // from the lazy snapshot header.
-            val headSnap = LakeLog.currentSnapshot(dir).get
-            val eqRecords = headSnap.eqdels.size
-            val eqKeys = headSnap.eqdels.map(_.n).sum
-            headSnap.eqdels.foreach { e =>
-              if (!Files.isRegularFile(dir.resolve(e.ref))) missingEq += 1
-            }
-            if (deep) {
-              // DISTRIBUTED physical-closure walk: one task per census
-              // chunk (checkpoint part / delta) via the same chunk +
-              // kill-set fold the `__files` census scans with. The
-              // driver plans from the O(1) manifest + O(changes)
-              // deltas and sums per-chunk counts — never a per-file
-              // syscall loop. Fallback (pruned delta broke the chunk
-              // fold): the snapshot-fold walk, as before.
-              LakeMetaTables.censusChunks(dir, head) match {
-                case Some((chunks, cpKill)) if chunks.nonEmpty =>
-                  val spark = org.apache.spark.sql.SparkSession.active
-                  val (md, sm, mdv, mb) = spark.sparkContext
-                    .parallelize(chunks, chunks.size)
-                    .map(c => LakeHealth.checkChunk(c, cpKill))
-                    .fold((0, 0, 0, 0)) { (a, b) =>
-                      (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4)
-                    }
-                  missingData = md; sizeMismatch = sm
-                  missingDv = mdv; missingBloom = mb
-                case _ =>
-                  headSnap.files.foreach { f =>
-                    val p = dir.resolve(f.path)
-                    if (!Files.isRegularFile(p)) missingData += 1
-                    else if (f.bytes > 0L && Files.size(p) != f.bytes)
-                      sizeMismatch += 1
-                    f.dv.foreach { d =>
-                      if (!Files.isRegularFile(dir.resolve(d))) missingDv += 1
-                    }
-                    if (f.bloomSc.nonEmpty &&
-                        !Files.isRegularFile(dir.resolve(f.path + ".bloom")))
-                      missingBloom += 1
-                  }
-              }
-            }
-            val ok = marker.isEmpty && orphanParts == 0 && staleRefs == 0 &&
-              missingData == 0 && sizeMismatch == 0 && missingDv == 0 &&
-              missingBloom == 0 && missingEq == 0
-            out(StructType(Seq(
-              StructField("ok", BooleanType, nullable = false),
-              StructField("head_version", LongType, nullable = false),
-              StructField("checkpoint_failure", StringType, nullable = true),
-              StructField("orphan_part_files", IntegerType, nullable = false),
-              StructField("stale_refs", IntegerType, nullable = false),
-              StructField("missing_data_files", IntegerType, nullable = false),
-              StructField("size_mismatches", IntegerType, nullable = false),
-              StructField("missing_delete_vectors", IntegerType, nullable = false),
-              StructField("missing_bloom_sidecars", IntegerType, nullable = false),
-              StructField("eq_delete_records", IntegerType, nullable = false),
-              StructField("eq_delete_keys", LongType, nullable = false),
-              StructField("missing_eq_sidecars", IntegerType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](
-                ok, head,
-                marker.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull,
-                orphanParts, staleRefs, missingData, sizeMismatch,
-                missingDv, missingBloom, eqRecords, eqKeys, missingEq))))
-          }
-        }
-      }
-
-      /** Named REFS over log versions — the write-audit-publish
-        * pattern on machinery (time travel, snapshot pinning) that
-        * already exists:
-        *
-        *   - `tag(table, name, version)` — immutable pin; `-1` tags
-        *     the head. Readable as `VERSION AS OF '<name>'`; vacuum
-        *     keeps tagged versions reconstructible.
-        *   - `branch(table, name)` — open the staging branch: pins the
-        *     DEFAULT view (`main` ref, atomic create-if-absent — the
-        *     exclusivity lock) at the head; commits landing after land
-        *     "on the branch": plain reads keep seeing the pinned view,
-        *     `VERSION AS OF '<name>'` audits the branch head.
-        *   - `publish(table, name)` — fast-forward: one atomic unlink
-        *     of the main ref flips every reader to the head; the
-        *     branch marker is then dropped.
-        *   - `drop_ref(table, name)` — remove a tag; dropping `main`
-        *     is the manual fast-forward (abandoning the audit).
-        *
-        * Documented limitation: while a branch is active, row-level
-        * ops (DELETE/UPDATE/MERGE) scan the PINNED view — the
-        * supported pattern is append-audit-publish, mutate after.
-        */
-      case "tag" => new UnboundProcedure {
-        override def name(): String = "tag"
-        override def description(): String =
-          "tag(table STRING, name STRING, version BIGINT): immutable named ref (-1 = head)"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "tag"
-          override def description(): String = "graftlake tag"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("name", StringType).build(),
-            ProcedureParameter.in("version", LongType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val refName = input.getUTF8String(1).toString
-            // 'main' is the write-audit-publish pin: a TAG named main
-            // would freeze every default read at its version forever
-            // (loadTable honors the main ref), with no publish to clear
-            // it — reserved for branch()'s pin alone
-            require(refName != "main", "'main' is the reserved pin ref")
-            val head = LakeLog.currentVersion(dir).get
-            val v = if (input.getLong(2) < 0L) head else input.getLong(2)
-            require(LakeLog.snapshotAt(dir, v).isDefined,
-              s"version $v is not reconstructible (pruned or future)")
-            require(LakeLog.writeRef(dir, refName, v, "tag", replace = false),
-              s"ref '$refName' already exists")
-            out(StructType(Seq(
-              StructField("tag", StringType, nullable = false),
-              StructField("version", LongType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](
-                org.apache.spark.unsafe.types.UTF8String.fromString(refName), v))))
-          }
-        }
-      }
-
-      case "branch" => new UnboundProcedure {
-        override def name(): String = "branch"
-        override def description(): String =
-          "branch(table STRING, name STRING): open the staging branch (pins the default view)"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "branch"
-          override def description(): String = "graftlake staging branch"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("name", StringType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val refName = input.getUTF8String(1).toString
-            require(refName != "main", "'main' is the reserved pin ref")
-            require(LakeLog.readRef(dir, refName).forall(_._2 == "branch"),
-              s"ref '$refName' already exists as a tag")
-            val head = LakeLog.currentVersion(dir).get
-            // the main pin is the exclusivity lock: create-if-absent
-            require(LakeLog.writeRef(dir, "main", head, "main", replace = false),
-              "a staging branch is already active (main is pinned)")
-            // replace = true clears a stale marker left by a crashed
-            // publish (marker without a pin is inert)
-            LakeLog.writeRef(dir, refName, head, "branch", replace = true)
-            out(StructType(Seq(
-              StructField("branch", StringType, nullable = false),
-              StructField("base_version", LongType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](
-                org.apache.spark.unsafe.types.UTF8String.fromString(refName), head))))
-          }
-        }
-      }
-
-      case "publish" => new UnboundProcedure {
-        override def name(): String = "publish"
-        override def description(): String =
-          "publish(table STRING, name STRING): fast-forward the default view to the branch head"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "publish"
-          override def description(): String = "graftlake publish"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("name", StringType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val refName = input.getUTF8String(1).toString
-            require(LakeLog.readRef(dir, refName).exists(_._2 == "branch"),
-              s"'$refName' is not the active staging branch")
-            LakeLog.dropRef(dir, "main") // THE atomic publish point
-            LakeLog.dropRef(dir, refName)
-            // head read AFTER the pin drop: a branch commit landing
-            // between a pre-drop read and the drop would make the
-            // returned version under-report what readers now see
-            val head = LakeLog.currentVersion(dir).get
-            out(StructType(Seq(
-              StructField("published_version", LongType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](head))))
-          }
-        }
-      }
-
-      case "drop_ref" => new UnboundProcedure {
-        override def name(): String = "drop_ref"
-        override def description(): String =
-          "drop_ref(table STRING, name STRING): remove a named ref"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "drop_ref"
-          override def description(): String = "graftlake ref removal"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("name", StringType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val refName = input.getUTF8String(1).toString
-            val dropped = LakeLog.dropRef(dir, refName)
-            out(StructType(Seq(
-              StructField("dropped", BooleanType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](dropped))))
-          }
-        }
-      }
-
-      /** RESTORE — the bad-write undo button. A rollback is ONE
-        * metadata commit whose successor snapshot is the target
-        * version's state (file list + schema + table props): zero
-        * rows read or written, instant at any table size, and the
-        * reverted-away versions stay time-travelable (nothing is
-        * deleted — vacuum reclaims them later under its own
-        * retention rules, and reconstructibility of the target
-        * implies its files are still referenced, so a restored
-        * snapshot never dangles). Two properties do NOT restore:
-        * the field-id counter (`maxcolid`) and the partition-spec
-        * history — both are append-only along the version chain, and
-        * winding them back would let post-rollback DDL recycle a
-        * column id / spec era still referenced by files alive in
-        * history. The change feed sees the rollback as a normal
-        * commit: remove-only over an append-only history (clean
-        * delete semantics), remove+add when it reverts row-level
-        * mutations (the documented rewrite contract applies); a
-        * dropped equality-delete record narrates as resurrection
-        * inserts over its still-live predating files.
-        */
-      case "clone" => new UnboundProcedure {
-        override def name(): String = "clone"
-        override def description(): String =
-          "clone(source STRING, target STRING, version BIGINT): zero-copy shallow clone (-1 = head)"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "clone"
-          override def description(): String = "graftlake shallow clone"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("source", StringType).build(),
-            ProcedureParameter.in("target", StringType).build(),
-            ProcedureParameter.in("version", LongType).build())
-          /** SHALLOW clone: one metadata commit whose v0 snapshot
-            * references the source's live data files by ABSOLUTE path
-            * (`Path.resolve` passes absolute entries through
-            * unchanged, so every reader works as-is). Zero bytes copy
-            * at any table size; the clone then evolves independently —
-            * its own writes/dvs land relative under its own dir, and
-            * compaction converges it to self-contained.
-            *
-            * The standard shallow-clone hazard — source vacuum
-            * reclaiming files the clone still references — is closed
-            * by CONTRACT: the clone drops a TAG ref
-            * (`clone-<target>`) on the SOURCE at the cloned version.
-            * Vacuum already keeps every tagged version reconstructible
-            * and its files referenced, so a source vacuum can never
-            * dangle the clone. Release the pin explicitly with
-            * `CALL system.drop_ref` after deep-copying the clone
-            * (CALL system.compact makes it self-contained).
-            */
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val srcDir = resolve(warehouse, input.getUTF8String(0).toString)
-            val dstDir = resolve(warehouse, input.getUTF8String(1).toString)
-            val v0 = input.getLong(2)
-            val head = LakeLog.currentVersion(srcDir).getOrElse(
-              throw new IllegalArgumentException(
-                s"clone source ${input.getUTF8String(0)} does not exist"))
-            val v = if (v0 < 0L) head else v0
-            val src = LakeLog.snapshotAt(srcDir, v).getOrElse(
-              throw new IllegalArgumentException(
-                s"version $v is not reconstructible (pruned or future)"))
-            if (LakeLog.currentVersion(dstDir).isDefined)
-              throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
-                org.apache.spark.sql.connector.catalog.Identifier.of(
-                  Array.empty, input.getUTF8String(1).toString))
-            // a clone restarts version numbering at 0, so the source's
-            // birth-seq scoping cannot transfer (a future clone commit
-            // would collide with source seqs and wrongly fall in/out of
-            // scope) — refuse; compaction resolves the records first
-            require(src.eqdels.isEmpty,
-              "graftlake: cannot clone a table with live equality " +
-                "deletes — run CALL system.compact on the source first")
-            val absolute = src.files.map { f =>
-              f.copy(
-                path = srcDir.resolve(f.path).toAbsolutePath.toString,
-                dv = f.dv.map(d => srcDir.resolve(d).toAbsolutePath.toString),
-                // REBASE birth seqs: the clone's log restarts at 0, so
-                // source seqs would collide with future clone versions
-                // and FUTURE equality deletes (stamped seq >= 1) would
-                // skip cloned files carrying larger source seqs — rows
-                // would silently escape replacement. 0 = "predates
-                // every record", exactly right for a v0 snapshot.
-                seq = 0L)
-            }
-            Files.createDirectories(dstDir.resolve("data"))
-            // strip txn/epoch watermarks: the clone is a new idempotence scope
-            val props = src.props.filterNot(p =>
-              p._1.startsWith("txn.") || p._1.startsWith("qe."))
-            LakeLog.commit(dstDir, expectedVersion = -1L,
-              LakeSnapshot(0L, src.schema, absolute, props))
-            // pin the cloned version on the SOURCE with a tag: vacuum
-            // keeps tagged versions reconstructible and their files
-            // referenced, so the source can never reclaim data the
-            // clone points at (drop_ref releases after a deep copy).
-            // Each clone gets a FRESH tag — reusing an existing tag
-            // that happens to sit at (v, "tag") would let one drop_ref
-            // silently unpin every other clone of the same name/version.
-            val tagBase = ("clone-" + input.getUTF8String(1).toString)
-              .map(c => if (c.isLetterOrDigit || c == '-' || c == '_') c else '-')
-            var tag = tagBase
-            var k = 1
-            while (!LakeLog.writeRef(srcDir, tag, v, "tag", replace = false)) {
-              k += 1; tag = s"$tagBase-$k"
-            }
-            out(StructType(Seq(
-              StructField("cloned_version", LongType, nullable = false),
-              StructField("n_files", IntegerType, nullable = false),
-              StructField("n_rows", LongType, nullable = false),
-              StructField("pin_tag", StringType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](
-                v, absolute.size, absolute.map(_.liveRows).sum,
-                org.apache.spark.unsafe.types.UTF8String.fromString(tag)))))
-          }
-        }
-      }
-
-      case "rollback" => new UnboundProcedure {
-        override def name(): String = "rollback"
-        override def description(): String =
-          "rollback(table STRING, version BIGINT): commit a new version restoring the table to `version`"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "rollback"
-          override def description(): String = "graftlake restore"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("version", LongType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val v = input.getLong(1)
-            val target = LakeLog.snapshotAt(dir, v).getOrElse(
-              throw new IllegalArgumentException(
-                s"version $v is not reconstructible (pruned or future)"))
-            var committed: Long = -1L
-            while (committed < 0L) {
-              val cur = LakeLog.currentSnapshot(dir).get
-              require(v <= cur.version,
-                s"cannot roll back to v$v: head is v${cur.version}")
-              val props = {
-                val maxid = (target.props.get("maxcolid") ++
-                  cur.props.get("maxcolid")).map(_.toInt).maxOption
-                // cur's spec history ⊇ target's: append-only chain
-                val specs = cur.props.get(LakePartitioning.SpecsKey)
-                  .orElse(target.props.get(LakePartitioning.SpecsKey))
-                target.props ++ maxid.map("maxcolid" -> _.toString) ++
-                  specs.map(LakePartitioning.SpecsKey -> _)
-              }
-              val restored =
-                LakeSnapshot(cur.version + 1, target.schema, target.files, props)
-              // the restore must also carry the TARGET's equality-delete
-              // set (same log numbering, so scoping transfers verbatim)
-              if (LakeLog.commit(dir, cur.version, restored,
-                  eqBase = Some(target.eqdels), parentSnap = Some(cur)))
-                committed = restored.version
-            }
-            out(StructType(Seq(
-              StructField("restored_version", LongType, nullable = false),
-              StructField("new_version", LongType, nullable = false),
-              StructField("files", IntegerType, nullable = false),
-              StructField("live_rows", LongType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](
-                v, committed, target.files.size, target.files.map(_.liveRows).sum))))
-          }
-        }
-      }
-
-      case "vacuum" => new UnboundProcedure {
-        override def name(): String = "vacuum"
-        override def description(): String =
-          "vacuum(table STRING, retain_last INT): drop data files + log versions outside the retention window"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "vacuum"
-          override def description(): String = "graftlake vacuum"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("retain_last", IntegerType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val retain = math.max(1, input.getInt(1))
-            val head = LakeLog.currentVersion(dir).get
-            // refs pin history: every tagged (or main-pinned) version
-            // must stay reconstructible after the prune — the floor
-            // never rises past the oldest pinned ref. Branch refs
-            // resolve to the head and add no constraint.
-            val refFloor = LakeLog.listRefs(dir).collect {
-              case (_, v, kind) if kind != "branch" => v
-            }.minOption
-            val floor = refFloor.foldLeft(
-              math.max(0L, head - retain + 1))(math.min)
-            val retained = (floor to head).flatMap(LakeLog.snapshotAt(dir, _))
-            // a file's bloom SIDECAR lives and dies with the file; an
-            // equality-delete sidecar lives while ANY retained version's
-            // record references it
-            val referenced = retained
-              .flatMap(_.files.flatMap(f => f.path +: (f.dv.toSeq ++
-                (if (f.bloomSc.nonEmpty) Seq(f.path + ".bloom") else Nil)))).toSet ++
-              retained.flatMap(_.eqdels.map(_.ref))
-            // checkpoint the retention floor BEFORE pruning the delta
-            // chain below it — every retained version must stay
-            // reconstructible from (checkpoint, deltas) afterwards
-            retained.find(_.version == floor).foreach(LakeLog.checkpoint(dir, _))
-            // age guard: data files land under final names BEFORE the
-            // log references them, so an unreferenced file newer than
-            // the head version's commit may belong to an IN-FLIGHT
-            // write — deleting it would leave the writer's subsequent
-            // commit dangling. Only reclaim files strictly older than
-            // the head commit (Delta's retention-check shape).
-            val headMtime = Files.getLastModifiedTime(
-              dir.resolve("_log").resolve(f"v$head%08d.json")).toMillis
-            val dataDir = dir.resolve("data")
-            val deletable = scala.util.Using.resource(Files.list(dataDir)) {
-              _.iterator().asScala
-                .filter(p => !referenced.contains("data/" + p.getFileName.toString))
-                .filter(p => Files.getLastModifiedTime(p).toMillis < headMtime)
-                .toSeq
-            }
-            deletable.foreach(Files.delete)
-            val prunedVersions = LakeLog.pruneBelow(dir, floor)
-            out(StructType(Seq(
-              StructField("deleted_data_files", IntegerType, nullable = false),
-              StructField("deleted_log_versions", IntegerType, nullable = false),
-              StructField("retained_from_version", LongType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](
-                deletable.size, prunedVersions, floor))))
-          }
-        }
-      }
-
-      /** PARTITION EVOLUTION (Iceberg's headline advantage over Hive
-        * layouts): re-declare how FUTURE files partition without
-        * touching a byte of data. A pure metadata commit appends the
-        * new spec to the table's spec history; every existing file
-        * keeps its write-time spec id, so pruning keeps deciding each
-        * file's tuple under the transforms it was written with, across
-        * eras. SPJ and dynamic partition overwrite require a single
-        * era (compact to converge).
-        */
-      case "evolve_partitioning" => new UnboundProcedure {
-        override def name(): String = "evolve_partitioning"
-        override def description(): String =
-          "evolve_partitioning(table STRING, spec STRING): make spec " +
-            "('col', 'bucket(n, col)', comma-separated; '' = unpartitioned) " +
-            "the current partition spec — metadata-only, existing files " +
-            "keep their write-time spec"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "evolve_partitioning"
-          override def description(): String = "graftlake partition evolution"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build(),
-            ProcedureParameter.in("spec", StringType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val specStr = input.getUTF8String(1).toString
-            var specId = -1
-            var done = false
-            while (!done) {
-              val cur = LakeLog.currentSnapshot(dir).getOrElse(
-                throw new IllegalStateException(
-                  s"graftlake: ${input.getUTF8String(0)} has no committed version"))
-              val next = LakePartitioning.parseSpecSyntax(specStr, cur.schema)
-              if (LakePartitioning.encode(next) ==
-                  cur.props.getOrElse(LakePartitioning.PropKey, "")) {
-                specId = LakePartitioning.currentSpecId(cur.props)
-                done = true // already current: no-op, no version burned
-              } else {
-                val props2 = LakePartitioning.evolve(cur.props, next)
-                specId = LakePartitioning.currentSpecId(props2)
-                done = LakeLog.commit(dir, cur.version,
-                  LakeSnapshot(cur.version + 1, cur.schema, cur.files, props2),
-                  parentSnap = Some(cur))
-              }
-            }
-            out(StructType(Seq(
-              StructField("spec_id", IntegerType, nullable = false),
-              StructField("spec", StringType, nullable = false))),
-              Seq(new GenericInternalRow(Array[Any](
-                specId, UTF8String.fromString(specStr)))))
-          }
-        }
-      }
-
-      case "history" => new UnboundProcedure {
-        override def name(): String = "history"
-        override def description(): String =
-          "history(table STRING): one row per retained log version"
-        override def bind(input: StructType): BoundProcedure = new BoundProcedure {
-          override def name(): String = "history"
-          override def description(): String = "graftlake history"
-          override def isDeterministic: Boolean = false
-          override def parameters(): Array[ProcedureParameter] = Array(
-            ProcedureParameter.in("table", StringType).build())
-          override def call(input: InternalRow): java.util.Iterator[Scan] = {
-            val dir = resolve(warehouse, input.getUTF8String(0).toString)
-            val rows0 = LakeLog.historyCensus(dir).map {
-              case (v, _, nFiles, nRows, _) =>
-                new GenericInternalRow(Array[Any](v, nFiles, nRows)): InternalRow
-            }
-            out(StructType(Seq(
-              StructField("version", LongType, nullable = false),
-              StructField("n_files", IntegerType, nullable = false),
-              StructField("n_rows", LongType, nullable = false))), rows0)
-          }
-        }
-      }
-    }
 }
 
 /** The staged half of an atomic CTAS/RTAS: the query's write lands
@@ -7416,14 +7215,9 @@ class GraftStagedTable(dir: Path, ident: Identifier, stagedSchema: StructType,
           override def commit(messages: Array[WriterCommitMessage]): Unit = {
             // staged: record only — the LOG moves in commitStagedChanges
             stagedMessages = messages
-            stagedFiles = messages.map(_.asInstanceOf[LakeFileMessage])
-              .flatMap(_.files)
-              .map(i => LakeFile(i.path, i.rows, i.stats, nulls = i.nulls,
-                cols = LakeColIds.cols(stagedSchema, propsWithIds),
-                part = i.part, colTypes = LakeColIds.types(stagedSchema),
-                specId = LakePartitioning.currentSpecId(propsWithIds), bytes = i.bytes,
-                sorted = propsWithIds.get("sortBy").toSeq, sums = i.sums, blooms = i.blooms, kmv = i.kmv,
-                bloomSc = i.bloomSc, sstats = i.sstats)).toSeq
+            stagedFiles = LakeLog.writtenEntries(
+              messages.toSeq.flatMap(_.asInstanceOf[LakeFileMessage].files),
+              stagedSchema, propsWithIds, propsWithIds.get("sortBy").toSeq)
           }
           override def abort(messages: Array[WriterCommitMessage]): Unit =
             LakeWriterFactory.deleteAll(dir.toString, messages)
@@ -7432,22 +7226,12 @@ class GraftStagedTable(dir: Path, ident: Identifier, stagedSchema: StructType,
     }
 
   override def commitStagedChanges(): Unit = {
-    val existing = LakeLog.currentSnapshot(dir)
-    existing match {
-      case None =>
-        if (!LakeLog.commit(dir, -1L, LakeSnapshot(0L, stagedSchema, stagedFiles, propsWithIds)))
-          throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-      case Some(_) if !replace =>
-        throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-      case Some(_) =>
-        var done = false
-        while (!done) {
-          val cur = LakeLog.currentSnapshot(dir).get
-          done = LakeLog.commit(dir, cur.version,
-            LakeSnapshot(cur.version + 1, stagedSchema, stagedFiles, propsWithIds),
-            parentSnap = Some(cur))
-        }
-    }
+    if (LakeLog.currentVersion(dir).isEmpty)
+      LakeLog.create(dir, ident, LakeSnapshot(0L, stagedSchema, stagedFiles, propsWithIds))
+    else if (!replace)
+      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
+    else LakeLog.commitLoop(dir)(cur => Some(LakeLog.Replace(
+      LakeSnapshot(cur.version + 1, stagedSchema, stagedFiles, propsWithIds))))
   }
 
   override def abortStagedChanges(): Unit =
@@ -7534,23 +7318,6 @@ object LakeDv {
 class LakeDeltaOperation(dir: Path, snapshot: LakeSnapshot,
     cmd: RowLevelOperation.Command) extends SupportsDelta {
 
-  /** Each file's delete-vector reference AS OF this operation's scan:
-    * commit fails if a concurrent committer moved any target file's
-    * vector in between — without this, two concurrent UPDATEs of the
-    * same row would both land (the dv union is idempotent but BOTH
-    * inserts survive), a lost-update anomaly the COW path's
-    * scanned-files check already rejects.
-    */
-  // LAZY: Spark constructs the row-level operation during DELETE
-  // analysis even when OptimizeMetadataOnlyDeleteFromTable later picks
-  // the scan-free equality/metadata path — an eager census
-  // materialization here would charge every keyed DELETE O(table)
-  // checkpoint-part parses for a plan that never runs. Forced only by
-  // an actual MOR delta commit (and the snapshot is immutable, so the
-  // capture point is equivalent).
-  private[sources] lazy val scanDv: Map[String, Option[String]] =
-    snapshot.files.map(f => f.path -> f.dv).toMap
-
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String = s"graftlake-mor-$cmd"
 
@@ -7583,29 +7350,14 @@ class LakeDeltaOperation(dir: Path, snapshot: LakeSnapshot,
               codec = LakeTable.codecOf(snapshot.props),
               rowGroupBytes = LakeTable.rowGroupBytes(snapshot.props))
           override def commit(messages: Array[WriterCommitMessage]): Unit = {
-            val ms = messages.map(_.asInstanceOf[LakeDeltaMessage])
-            val inserts = ms.flatMap(_.inserts).flatMap(_.files)
-              .map(i => LakeFile(i.path, i.rows, i.stats, nulls = i.nulls,
-                cols = LakeColIds.cols(snapshot.schema, snapshot.props),
-                part = i.part, colTypes = LakeColIds.types(snapshot.schema),
-                specId = LakePartitioning.currentSpecId(snapshot.props), bytes = i.bytes,
-                sums = i.sums, blooms = i.blooms, kmv = i.kmv,
-                bloomSc = i.bloomSc, sstats = i.sstats)).toSeq
+            val ms = messages.toSeq.map(_.asInstanceOf[LakeDeltaMessage])
+            // MOR inserts carry no sort layout: the delta plan demands none
+            val inserts = LakeLog.writtenEntries(ms.flatMap(_.inserts).flatMap(_.files),
+              snapshot.schema, snapshot.props, sorted = Seq.empty)
             val deletes = ms.flatMap(_.deletes.toSeq)
               .groupBy(_._1).map { case (f, ps) => f -> ps.flatMap(_._2).toSet }
-            var done = false
-            while (!done) {
-              val cur = LakeLog.currentSnapshot(dir).get
-              val live = cur.files.map(f => f.path -> f).toMap
-              require(deletes.keySet.subsetOf(live.keySet),
-                s"concurrent change removed delete targets ${deletes.keySet -- live.keySet}")
-              // snapshot-isolation on the ROW level: the target's dv
-              // must be exactly what this operation scanned, or a
-              // concurrent row-level commit landed in between
-              deletes.keySet.foreach { p =>
-                require(live(p).dv == scanDv.getOrElse(p, None),
-                  s"concurrent update: delete vector of $p changed since this operation's scan")
-              }
+            LakeLog.commitLoop(dir) { cur =>
+              LakeLog.requireReadSetCurrent(cur, snapshot, deletes.keySet, inserts.nonEmpty)
               val updated = cur.files.map { f =>
                 deletes.get(f.path) match {
                   case None => f
@@ -7616,8 +7368,7 @@ class LakeDeltaOperation(dir: Path, snapshot: LakeSnapshot,
                     f.copy(dv = Some(LakeDv.write(dir, merged)), dvRows = merged.length.toLong)
                 }
               }
-              done = LakeLog.commit(dir, cur.version, cur.next(updated ++ inserts),
-                parentSnap = Some(cur))
+              Some(LakeLog.Replace(cur.next(updated ++ inserts)))
             }
           }
           override def abort(messages: Array[WriterCommitMessage]): Unit =

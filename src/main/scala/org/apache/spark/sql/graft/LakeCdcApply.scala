@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.col
 
-import graft.sources.{LakeColIds, LakeEq, LakeFile, LakeFileMessage, LakeLog,
-  LakePartitioning, LakeTable, LakeWriterFactory}
+import graft.sources.{LakeEq, LakeFileMessage, LakeLog, LakePartitioning, LakeTable,
+  LakeWriterFactory}
 
 /** The CDC-APPLY half of [[graft.plans.UpsertMergeRewrite]]: ONE
   * atomic, scan-free commit for the canonical changelog-apply MERGE
@@ -96,20 +96,10 @@ case class LakeCdcApplyCommand(dirStr: String, source: LogicalPlan)
       // sidecar lands once, BEFORE the retry loop; the unique guard
       // fails the whole write on duplicate source keys
       val eqAdd = LakeEq.recordOf(dir, ucs, messages, uniqueGuard = true)
-      val written = messages.flatMap(_.files).toSeq
-        .map(i => LakeFile(i.path, i.rows, i.stats, nulls = i.nulls,
-          cols = LakeColIds.cols(snap.schema, snap.props),
-          part = i.part, colTypes = LakeColIds.types(snap.schema),
-          specId = LakePartitioning.currentSpecId(snap.props),
-          bytes = i.bytes, sorted = snap.props.get("sortBy").toSeq,
-          sums = i.sums, blooms = i.blooms, kmv = i.kmv,
-          bloomSc = i.bloomSc, sstats = i.sstats))
-      var done = false
-      while (!done) {
-        val cur = LakeLog.currentSnapshot(dir).get
-        done = LakeLog.commitAppend(dir, cur.version, written,
-          cur.schema, cur.props, eqAdd = eqAdd)
-      }
+      val written = LakeLog.writtenEntries(messages.toSeq.flatMap(_.files),
+        snap.schema, snap.props, snap.props.get("sortBy").toSeq)
+      LakeLog.commitLoop(dir)(cur =>
+        Some(LakeLog.Append(written, cur.props, eqAdd = eqAdd)))
       Seq.empty
     } catch {
       case t: Throwable =>

@@ -6282,4 +6282,122 @@ class GraftLakeSpec extends AnyFunSuite {
     assert(!Files.isDirectory(tableDir("t_ddl")))
     intercept[Exception](spark.table("lake.db.t_ddl").collect())
   }
+
+  test("concurrent CREATE: of 8 racing creates exactly one returns, the rest get TableAlreadyExistsException") {
+    import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
+    import org.apache.spark.sql.connector.catalog.{Identifier, Table}
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val cat = spark.sessionState.catalogManager.catalog("lake")
+      .asInstanceOf[GraftLakeCatalog]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try for (trial <- 0 until 10) {
+      val ident = Identifier.of(Array("db"), s"t_createrace$trial")
+      val barrier = new java.util.concurrent.CyclicBarrier(8)
+      val futures = (0 until 8).map { w =>
+        pool.submit(() => {
+          // every writer proposes its OWN schema: a loser handed back
+          // its own definition would disagree with the committed one
+          val schema = new StructType().add("id", LongType).add(s"c$w", LongType)
+          barrier.await()
+          try Right(cat.createTable(ident, schema, Array.empty,
+            java.util.Map.of[String, String]()))
+          catch { case e: Exception => Left(e) }
+        }: Either[Exception, Table])
+      }
+      val results = futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      val won = results.collect { case Right(t) => t }
+      assert(won.size == 1, s"trial $trial: ${won.size} of 8 creates returned")
+      results.collect { case Left(e) => e }.foreach(e =>
+        assert(e.isInstanceOf[TableAlreadyExistsException], s"trial $trial: $e"))
+      assert(won.head.schema() == cat.loadTable(ident).schema(),
+        s"trial $trial: the returned table must be the committed definition")
+    } finally pool.shutdown()
+  }
+
+  test("MOR commit rejects a concurrent keyed upsert of the row it rewrote (equality-delete guard)") {
+    import spark.implicits._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.sources.{LakeDeltaMessage, LakeDeltaOperation, LakeFileMessage, LakeWriterFactory}
+    spark.sql("CREATE TABLE lake.db.t_equpdrace (id BIGINT, v BIGINT, s STRING) " +
+      "TBLPROPERTIES ('mode' = 'mor', 'upsert_key' = 'id')")
+    spark.range(0, 20).select($"id", $"id".as("v"), lit("a").as("s"))
+      .coalesce(1).writeTo("lake.db.t_equpdrace").append()
+    val dir = tableDir("t_equpdrace")
+    val snap = LakeLog.currentSnapshot(dir).get
+    val target = snap.files.head.path
+    // an UPDATE of id 3 scans NOW and writes its new row...
+    val op = new LakeDeltaOperation(dir, snap,
+      org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE)
+    val write = op.newWriteBuilder(new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+      override def queryId(): String = "race"
+      override def schema(): org.apache.spark.sql.types.StructType = snap.schema
+      override def options(): org.apache.spark.sql.util.CaseInsensitiveStringMap =
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Map.of())
+    }).build().toBatch
+    val w = LakeWriterFactory(dir.toString, snap.schema, snap.schema.fieldNames)
+      .createWriter(0, 0L)
+    w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](3L, -1L, UTF8String.fromString("update"))))
+    val inserted = w.commit().asInstanceOf[LakeFileMessage]
+    // ...a keyed upsert of the same key lands first...
+    Seq((3L, 50L, "upsert")).toDF("id", "v", "s").coalesce(1)
+      .writeTo("lake.db.t_equpdrace").option("upsert", "true").append()
+    // ...so the UPDATE's insert file, born after the upsert's record,
+    // would escape it: the commit must fail instead of keeping both
+    val err = intercept[IllegalArgumentException] {
+      write.commit(Array(LakeDeltaMessage(Map(target -> Seq(3L)), Seq(inserted))))
+    }
+    assert(err.getMessage.contains("equality delete"), err.getMessage)
+    val got = rows("t_equpdrace")
+    assert(got.size == 20 && got.filter(_._1 == 3L) == Seq((3L, 50L, "upsert")),
+      s"id 3 must keep exactly the upsert's row: ${got.filter(_._1 == 3L)}")
+  }
+
+  test("concurrent ALTER TABLE SET TBLPROPERTIES and appends: all 8 racing commits land") {
+    import spark.implicits._
+    spark.sql("CREATE TABLE lake.db.t_alterrace (id BIGINT, v BIGINT, s STRING)")
+    val dir = tableDir("t_alterrace")
+    val v0 = LakeLog.currentVersion(dir).get
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val alters = (0 until 4).map(i => scala.concurrent.Future {
+      spark.sql(s"ALTER TABLE lake.db.t_alterrace SET TBLPROPERTIES ('race_k$i' = 'v$i')")
+      ()
+    })
+    val appends = (0 until 4).map(w => scala.concurrent.Future {
+      spark.range(w * 100L, (w + 1) * 100L)
+        .select($"id", ($"id" * 2L).as("v"), lit(s"w$w").as("s"))
+        .coalesce(1).writeTo("lake.db.t_alterrace").append()
+    })
+    scala.concurrent.Await.result(scala.concurrent.Future.sequence(alters ++ appends),
+      scala.concurrent.duration.Duration("120s"))
+    pool.shutdown()
+    val snap = LakeLog.currentSnapshot(dir).get
+    assert(snap.version == v0 + 8L, s"8 racing commits must land: v$v0 -> v${snap.version}")
+    (0 until 4).foreach(i => assert(snap.props.get(s"race_k$i").contains(s"v$i"),
+      s"property race_k$i lost: ${snap.props}"))
+    assert(rows("t_alterrace") == (0L until 400L).map(i => (i, i * 2L, s"w${i / 100}")))
+  }
+
+  test("procedures: every listed name loads and binds; an unknown name is rejected with the list") {
+    import org.apache.spark.sql.connector.catalog.Identifier
+    import org.apache.spark.sql.types.StructType
+    val cat = spark.sessionState.catalogManager.catalog("lake")
+      .asInstanceOf[GraftLakeCatalog]
+    val listed = cat.listProcedures(Array("system")).map(_.name).toSeq
+    assert(listed.sorted == Seq("branch", "clone", "compact", "compact_size",
+      "compact_where", "drop_ref", "evolve_partitioning", "health", "history",
+      "maintain", "publish", "rollback", "tag", "vacuum", "zorder", "zorder_where"))
+    listed.foreach { n =>
+      val unbound = cat.loadProcedure(Identifier.of(Array("system"), n))
+      assert(unbound.name() == n && unbound.description().startsWith(s"$n("))
+      val bound = unbound.bind(new StructType())
+      assert(bound.name() == n && !bound.isDeterministic, n)
+      assert(Set("table", "source").contains(bound.parameters().head.name()), n)
+    }
+    val err = intercept[IllegalArgumentException](
+      cat.loadProcedure(Identifier.of(Array("system"), "no_such_procedure")))
+    listed.foreach(n => assert(err.getMessage.contains(n), err.getMessage))
+  }
 }

@@ -26,14 +26,14 @@ class MetaQueryCountersSpec extends AnyFunSuite {
     * checkpoint IO at all is itself a regression and is pinned to 0.
     */
   private val budgets: Seq[(String, Long)] = Seq(
-    "q92_wap_refs" -> 21L,
-    "q93_metadata_agg" -> 12L,
-    "q94_filtered_meta" -> 12L,
-    "q95_bloom_lookup" -> 7L,
-    "q96_grouped_meta" -> 12L,
-    "q97_partition_census" -> 10L,
-    "q98_partition_ddl" -> 19L,
-    "q99_metadata_sum" -> 12L)
+    "q92_wap_refs" -> 18L,
+    "q93_metadata_agg" -> 11L,
+    "q94_filtered_meta" -> 11L,
+    "q95_bloom_lookup" -> 6L,
+    "q96_grouped_meta" -> 11L,
+    "q97_partition_census" -> 9L,
+    "q98_partition_ddl" -> 18L,
+    "q99_metadata_sum" -> 11L)
 
   budgets.foreach { case (name, deltaBudget) =>
     test(s"$name: log-op budget is exact ($deltaBudget delta reads, zero checkpoint IO)") {
