@@ -9,6 +9,22 @@ import org.apache.spark.sql.SparkSession
   * which spark-submit owns. AQE is on so skewed shuffles re-plan at
   * runtime — at 100 TB that (plus `coalescePartitions`) replaces most
   * hand-tuning of `spark.sql.shuffle.partitions`.
+  *
+  * The codegen cache holds 1000 compiled classes instead of Spark's
+  * default 100 (`spark.sql.codegen.cache.maxEntries`, a static conf read
+  * once per JVM, when the first plan is compiled). The reference DAG's
+  * working set does not fit in 100: one `epa_batch` pass (CSV ingest to
+  * export, Q01–Q10 included) generates about 290 classes, and a
+  * `lake_refresh` set-up plus one round about 290 more, so at the
+  * default every warm pass recompiled (and re-JIT-warmed) almost every
+  * class the cold pass had compiled: a class-load log of an `epa_batch`
+  * run held 587 generated classes for a cold and one warm pass, and
+  * with this cap 293 for a cold and two warm passes (15 in the two warm
+  * passes). 1000 holds more than three such working sets. It is
+  * deliberately not sized for the whole 190-query suite: one
+  * `graft.Verify` pass over it at sf0.001 generates about 3.7 k classes,
+  * which would keep that many compiled classes (and their metaspace)
+  * alive for a workload that never repeats a plan within a pass.
   */
 object GraftSession {
   def builder(appName: String = "graft"): SparkSession.Builder = {
@@ -35,6 +51,7 @@ object GraftSession {
       // wrapping long arithmetic (the hash mixers rely on it). The
       // reference runs Spark 3.0 where this was the only behavior.
       .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
   }
 

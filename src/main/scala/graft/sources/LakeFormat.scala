@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path => NioPath}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -73,7 +75,11 @@ object LakeParquet {
       bloomCols: Seq[String] = Seq.empty,
       codec: String = "snappy",
       rowGroupBytes: Long = 0L): ParquetWriter[InternalRow] = {
+    // an empty Hadoop conf: the builder's default parses Hadoop's XML
+    // defaults for every file written, and none of them is read here
+    // (getWriteSupport sets every key ParquetWriteSupport reads)
     var b = new RowWriteBuilder(new LocalOutputFile(file), schema)
+      .withConf(new Configuration(false))
       .withCompressionCodec(Codecs.getOrElse(codec.toLowerCase,
         throw new IllegalArgumentException(
           s"graftlake: unsupported compression '$codec' " +
@@ -96,6 +102,15 @@ object LakeParquet {
         .withMaxBloomFilterBytes(128 * 1024)
     b.build()
   }
+
+  /** Opens `file` for its footer, row groups and bloom filters. Reads
+    * use parquet's own options with a plain (non-Hadoop) configuration:
+    * `ParquetFileReader.open(InputFile)` builds a Hadoop `Configuration`,
+    * which parses Hadoop's XML defaults again on every open.
+    */
+  def openFooter(file: NioPath): ParquetFileReader =
+    ParquetFileReader.open(new LocalInputFile(file),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
 
   // ---- LOG-recorded KMV sketches: per-file NDV for the estimator ----
 
@@ -253,7 +268,7 @@ object LakeParquet {
     */
   def bloomMightContain(file: NioPath, col: String, values: Seq[Any]): Boolean = {
     bloomFooterProbes.incrementAndGet()
-    val reader = ParquetFileReader.open(new LocalInputFile(file))
+    val reader = openFooter(file)
     try {
       reader.getFooter.getBlocks.asScala.exists { block =>
         block.getColumns.asScala.find(_.getPath.toDotString == col) match {
@@ -313,7 +328,7 @@ object LakeParquet {
 
   def footerStats(file: NioPath): FileStats = {
     footerStatOpens.incrementAndGet()
-    val reader = ParquetFileReader.open(new LocalInputFile(file))
+    val reader = openFooter(file)
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq
@@ -464,7 +479,7 @@ object LakeParquet {
       resolve: String => Option[String])
       : Option[(VectorizedParquetRecordReader, Seq[(Long, Long)])] = {
     dataFileOpens.incrementAndGet()
-    val reader = ParquetFileReader.open(new LocalInputFile(file))
+    val reader = openFooter(file)
     try {
       val footer = reader.getFooter
       val fileSchema = footer.getFileMetaData.getSchema

@@ -490,9 +490,7 @@ case class LakeRowGroupsChunk(dir: String, path: String,
 case class LakeRowGroupsReaderFactory() extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val c = p.asInstanceOf[LakeRowGroupsChunk]
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      new org.apache.parquet.io.LocalInputFile(
-        Paths.get(c.dir).resolve(c.path)))
+    val reader = LakeParquet.openFooter(Paths.get(c.dir).resolve(c.path))
     val blocks =
       try {
         import scala.jdk.CollectionConverters._

@@ -1,7 +1,12 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** EPA-shaped hourly-measurement CSV ingest (SURVEY.md §2.1 S1/S2, §2.2
   * P1–P6), re-expressed Spark-first from ASVSP `load_hourly.py:19-105`.
@@ -10,9 +15,12 @@ import org.apache.spark.sql.functions._
   *   - one `union` of per-file frames + a single partitioned write,
   *     instead of its 54-iteration overwrite/append loop — one job, one
   *     output commit, and Catalyst sees the whole plan;
-  *   - the CSV is still read schema-less + cast (bug-compatible with the
-  *     reference's `inferSchema=false` string read), but through a
-  *     single projection.
+  *   - every column is still read as a string and cast later
+  *     (bug-compatible with the reference's `inferSchema=false` read),
+  *     through a single projection; but the column names come from a
+  *     header contract ([[readCsv]]) rather than from a Spark job that
+  *     reads the header line: any header that names the consumed
+  *     columns is accepted, and every file's header is checked.
   *
   * Load-bearing semantics preserved exactly (SURVEY.md §2.9):
   *   - the full 18-entry truncated-state-name repair map
@@ -47,15 +55,54 @@ object MeasurementIngest {
   /** Pollutants measured in ppb upstream, converted to ppm (P4). */
   val PpbPollutants: Set[String] = Set("NO2", "SO2")
 
-  /** S1: header'd CSV, no inference (all strings, cast later). */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "false").csv(path)
+  /** S1: header'd CSV, every column a string (no inference).
+    *
+    * The header contract: the header line is read here, on the driver
+    * (the first non-blank line of the file, or of the first visible part
+    * file of a directory, tokenized with Spark's CSV defaults), and its
+    * names are handed to the reader as an all-string schema with
+    * `enforceSchema=false`. Building the frame so starts no Spark job (a
+    * schema-less `header=true` read runs one per path only to name the
+    * columns), while every task still checks its own file's header
+    * against that schema: a file whose header names differ, or come in
+    * another order, fails with Spark's header-mismatch error instead of
+    * being read by position. An input with no header line, or with a
+    * blank column name, fails here, naming the file (a repeated name
+    * fails in Spark's own duplicate-column check).
+    */
+  def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val schema = StructType(header(spark, path).map(StructField(_, StringType)))
+    spark.read.schema(schema).option("header", "true").option("enforceSchema", "false")
+      .csv(path)
+  }
+
+  /** The column names of `path`'s header line (see [[readCsv]]). */
+  private def header(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = new CSVOptions(Map.empty[String, String], true,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val files =
+      if (!fs.getFileStatus(root).isDirectory) Seq(root)
+      else fs.listStatus(root).toSeq.filter(_.isFile).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .sortBy(_.getName)
+    val (file, line) = files.iterator
+      .flatMap(f => CSVUtils.readHeaderLine(f, options, conf).map(f -> _))
+      .nextOption()
+      .getOrElse(throw new IllegalArgumentException(
+        s"CSV input $path has no header line (no non-blank line in ${files.mkString(", ")})"))
+    val names = new CsvParser(options.asParserSettings).parseLine(line).toSeq
+    val blank = names.indexWhere(n => n == null || n.trim.isEmpty)
+    require(blank < 0, s"CSV header of $file has a blank name in column ${blank + 1}: $line")
+    names
+  }
 
   /** P1: space → underscore in every column name. */
   def normalizeColumns(df: DataFrame): DataFrame =
-    df.columns.foldLeft(df) { (d, c) =>
-      if (c.contains(" ")) d.withColumnRenamed(c, c.replace(" ", "_")) else d
-    }
+    df.withColumnsRenamed(df.columns.filter(_.contains(" "))
+      .map(c => c -> c.replace(" ", "_")).toMap)
 
   /** P5 repair chain — entries fold in reference order. */
   def repairStateName(c: Column): Column =

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,26 +15,7 @@ import graft.sources.MeasurementIngest
 class MeasurementIngestSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local("ingest-spec")
 
-  /** EPA-shaped CSV: truncated state name, PM25 + NO2 (÷1000 case),
-    * weekend (2024-01-06/07) + weekday dates, ppb units on NO2.
-    */
-  def writeFixture(): (String, String) = {
-    val dir = Files.createTempDirectory("epa-fixture")
-    val header = "State Code,County Code,Site Num,State Name,Date Local,Time Local,Sample Measurement,Units of Measure"
-    val pm25 = Seq(
-      "06,001,0001,Californi,2024-01-05,01:00,10.0,Micrograms/cubic meter (LC)",
-      "06,001,0001,Californi,2024-01-05,02:00,20.0,Micrograms/cubic meter (LC)",
-      "06,001,0001,Californi,2024-01-06,01:00,40.0,Micrograms/cubic meter (LC)",
-      "36,005,0002,New York,2024-01-06,13:00,8.0,Micrograms/cubic meter (LC)")
-    val no2 = Seq(
-      "06,001,0001,Californi,2024-01-05,01:00,50.0,Parts per billion",
-      "36,005,0002,New York,2024-01-06,13:00,30.0,Parts per billion")
-    val pPm = dir.resolve("hourly_PM25_2024.csv")
-    val pNo = dir.resolve("hourly_NO2_2024.csv")
-    Files.writeString(pPm, (header +: pm25).mkString("\n"))
-    Files.writeString(pNo, (header +: no2).mkString("\n"))
-    (pPm.toString, pNo.toString)
-  }
+  import MeasurementIngestSpec.writeFixture
 
   lazy val ingested = {
     val (pm, no) = writeFixture()
@@ -190,5 +172,123 @@ class MeasurementIngestSpec extends AnyFunSuite {
     // NO2/SO2 survive untouched; PM25 fully replaced (a static-mode
     // overwrite would have truncated the siblings)
     assert(got == Set(("NO2", 1L), ("SO2", 3L), ("PM25", 99L)))
+  }
+
+  /** Jobs started while `body` runs. Listener events arrive
+    * asynchronously, so a marker job run after `body` flushes them: the
+    * bus delivers in order, and every start before the marker's counts.
+    */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.put(
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription("jobs-started-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      var n = 0
+      var next = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (next != "jobs-started-marker") {
+        assert(next != null, "the marker job's start never reached the listener")
+        n += 1
+        next = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      (out, n)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("header contract: building ingestAll over three files starts no Spark job") {
+    val (pm, no) = writeFixture()
+    val so2 = Files.createTempDirectory("epa-so2").resolve("hourly_SO2_2024.csv")
+    Files.copy(java.nio.file.Paths.get(no), so2)
+    val (df, jobs) = jobsStartedBy(MeasurementIngest.ingestAll(spark,
+      Seq("PM25" -> pm, "NO2" -> no, "SO2" -> so2.toString)))
+    assert(jobs == 0, s"building the frame started $jobs Spark jobs")
+    assert(df.count() == 8)
+  }
+
+  test("header contract: the 24-column EPA header ingests like the 8-column one") {
+    val (pm, no) = writeFixture()
+    val wide = Files.createTempDirectory("epa-wide")
+    def widen(src: String, name: String): String = {
+      val lines = Files.readAllLines(java.nio.file.Paths.get(src)).toArray(Array.empty[String])
+      val narrow = lines.head.split(",").toSeq
+      val rows = lines.tail.map { l =>
+        val byName = narrow.zip(l.split(",")).toMap
+        MeasurementIngestSpec.EpaHeader.map(c => byName.getOrElse(c, s"x-$c"))
+      }
+      val out = wide.resolve(name)
+      Files.writeString(out, (MeasurementIngestSpec.EpaHeader +: rows.toSeq)
+        .map(_.map(v => "\"" + v + "\"").mkString(",")).mkString("", "\n", "\n"))
+      out.toString
+    }
+    val narrowDf = MeasurementIngest.ingestAll(spark, Seq("PM25" -> pm, "NO2" -> no))
+    val wideDf = MeasurementIngest.ingestAll(spark,
+      Seq("PM25" -> widen(pm, "pm25.csv"), "NO2" -> widen(no, "no2.csv")))
+    assert(wideDf.schema == narrowDf.schema)
+    assert(wideDf.count() == 6)
+    assert(wideDf.exceptAll(narrowDf).isEmpty && narrowDf.exceptAll(wideDf).isEmpty)
+  }
+
+  test("header contract: a part file whose header swaps two columns fails loudly") {
+    val (pm, _) = writeFixture()
+    val lines = Files.readAllLines(java.nio.file.Paths.get(pm)).toArray(Array.empty[String])
+    // the second part file holds the same kind of rows with State Code
+    // and County Code swapped, header and values alike: a valid CSV
+    // that a read by position would load with the two codes exchanged
+    def swap(l: String) = { val f = l.split(","); (f(1) +: f(0) +: f.drop(2)).mkString(",") }
+    val dir = Files.createTempDirectory("epa-parts")
+    Files.writeString(dir.resolve("part-00000.csv"), lines.mkString("\n"))
+    Files.writeString(dir.resolve("part-00001.csv"), lines.map(swap).mkString("\n"))
+    val df = MeasurementIngest.ingestAll(spark, Seq("PM25" -> dir.toString))
+    val e = intercept[Exception](df.collect())
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msg.contains("CSV header does not conform to the schema"), msg)
+    assert(msg.contains("part-00001.csv"), msg)
+  }
+
+  test("header contract: an empty file fails with a message naming it") {
+    val empty = Files.createTempFile("epa-empty", ".csv")
+    val e = intercept[IllegalArgumentException](
+      MeasurementIngest.ingestAll(spark, Seq("PM25" -> empty.toString)))
+    assert(e.getMessage.contains(empty.toString), e.getMessage)
+  }
+}
+
+object MeasurementIngestSpec {
+
+  /** The EPA hourly CSV header (FIXTURES.md A1), in file order. */
+  val EpaHeader: Seq[String] = Seq("State Code", "County Code", "Site Num",
+    "Parameter Code", "POC", "Latitude", "Longitude", "Datum", "Parameter Name",
+    "Date Local", "Time Local", "Date GMT", "Time GMT", "Sample Measurement",
+    "Units of Measure", "MDL", "Uncertainty", "Qualifier", "Method Type",
+    "Method Code", "Method Name", "State Name", "County Name", "Date of Last Change")
+
+  /** EPA-shaped CSV with the 8 consumed columns: truncated state name,
+    * PM25 + NO2 (÷1000 case), weekend (2024-01-06/07) + weekday dates,
+    * ppb units on NO2.
+    */
+  def writeFixture(): (String, String) = {
+    val dir = Files.createTempDirectory("epa-fixture")
+    val header = "State Code,County Code,Site Num,State Name,Date Local,Time Local,Sample Measurement,Units of Measure"
+    val pm25 = Seq(
+      "06,001,0001,Californi,2024-01-05,01:00,10.0,Micrograms/cubic meter (LC)",
+      "06,001,0001,Californi,2024-01-05,02:00,20.0,Micrograms/cubic meter (LC)",
+      "06,001,0001,Californi,2024-01-06,01:00,40.0,Micrograms/cubic meter (LC)",
+      "36,005,0002,New York,2024-01-06,13:00,8.0,Micrograms/cubic meter (LC)")
+    val no2 = Seq(
+      "06,001,0001,Californi,2024-01-05,01:00,50.0,Parts per billion",
+      "36,005,0002,New York,2024-01-06,13:00,30.0,Parts per billion")
+    val pPm: Path = dir.resolve("hourly_PM25_2024.csv")
+    val pNo: Path = dir.resolve("hourly_NO2_2024.csv")
+    Files.writeString(pPm, (header +: pm25).mkString("\n"))
+    Files.writeString(pNo, (header +: no2).mkString("\n"))
+    (pPm.toString, pNo.toString)
   }
 }
