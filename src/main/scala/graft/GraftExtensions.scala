@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.ResolveSubqueryTableReferences
 import graft.functions.NativeExprs
 import graft.plans.{AsOfMergeStrategy, CosineFloatExpr, SimilarityJoinRewrite, UpsertMergeRewrite}
 
@@ -36,5 +37,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // scan-free equality-delete append (post-hoc: runs on the analyzed
     // WriteDelta the built-in MERGE rewrite produced).
     e.injectPostHocResolutionRule(_ => UpsertMergeRewrite())
+    // SQL MERGE whose source is a temp view over a DataFrame that reads
+    // a V2 table: resolve the reference its group filter copied.
+    e.injectResolutionRule(_ => ResolveSubqueryTableReferences)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{GraftLocalFileSystem, GraftLocalFs}
+
 /** Session factory for the graft engine.
   *
   * Local-mode defaults tuned for the test harness (local[32], 128 GiB);
@@ -25,6 +27,24 @@ import org.apache.spark.sql.SparkSession
   * `graft.Verify` pass over it at sf0.001 generates about 3.7 k classes,
   * which would keep that many compiled classes (and their metaspace)
   * alive for a workload that never repeats a plan within a pass.
+  *
+  * Local files go through `sources.GraftLocalFileSystem` (Hadoop's
+  * `fs.file.impl`: Spark's file-source reads and writes) and
+  * `sources.GraftLocalFs` (`fs.AbstractFileSystem.file.impl`: the
+  * `FileContext` side, which streaming checkpoints and state stores
+  * use). Without the native Hadoop library (`libhadoop.so`), Hadoop's
+  * own local filesystem sets the mode of every file, checksum file and
+  * directory it creates by forking a `chmod` process. A JFR recording
+  * (`jdk.ProcessStart`) of one `epa_batch` run, a cold and a warm pass,
+  * counted 1,540 of them (770 a pass: 944 from file creates, 596 from
+  * mkdirs; the `daily` layer's 108-file write alone 343 a pass), and
+  * a 3-micro-batch stateful stream 85, most through `FileContext`.
+  * The graft classes set the same modes with a chmod(2) syscall and
+  * fork none. Hadoop caches the first local `FileSystem` of a JVM user
+  * whatever its configuration: a JVM that opened the local filesystem
+  * before it built its first session keeps Hadoop's class, slower but
+  * with the same modes, until that cache is closed (`FileContext` has
+  * no such cache).
   */
 object GraftSession {
   def builder(appName: String = "graft"): SparkSession.Builder = {
@@ -52,6 +72,8 @@ object GraftSession {
       // reference runs Spark 3.0 where this was the only behavior.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       .config("spark.ui.enabled", "false")
   }
 

@@ -384,12 +384,38 @@ object LakeParquet {
   }
 
   /** A vectorized reader positioned over `columns` (which MUST exist
-    * in the file — the caller null-fills absent ones itself).
+    * in the file — the caller null-fills absent ones itself), over
+    * every row group. It opens through [[openFooter]], like
+    * [[openVectorizedPruned]]: Spark's `initialize(path, columns)` would
+    * look the file up through a Hadoop `FileSystem` and open it as a
+    * `HadoopInputFile` with Hadoop read options.
     */
   def openVectorized(file: NioPath, columns: Seq[String]): VectorizedParquetRecordReader = {
     dataFileOpens.incrementAndGet()
+    val reader = openFooter(file)
+    try vectorized(reader, columns, Array.fill(reader.getFooter.getBlocks.size)(true))
+    catch { case e: Throwable => reader.close(); throw e }
+  }
+
+  /** Spark's vectorized decoder over the `keep`-marked row groups of
+    * `reader`'s file, decoding only `columns`. The file reader's
+    * requested schema is what bounds page IO to those columns; the
+    * decoder's copy rides `initPruned`. Closing the result closes
+    * `reader`.
+    */
+  private def vectorized(reader: ParquetFileReader, columns: Seq[String],
+      keep: Array[Boolean]): VectorizedParquetRecordReader = {
+    val fileSchema = reader.getFooter.getFileMetaData.getSchema
+    val requested = org.apache.parquet.schema.Types.buildMessage()
+      .addFields(columns.map(c =>
+        (fileSchema: org.apache.parquet.schema.GroupType).getType(c)): _*)
+      .named("spark_schema")
+    reader.setRequestedSchema(requested)
+    val totalRows = reader.getFooter.getBlocks.asScala.zip(keep)
+      .collect { case (b, true) => b.getRowCount }.sum
     val r = new VectorizedParquetRecordReader(/* useOffHeap = */ false, /* capacity = */ 4096)
-    r.initialize(file.toString, columns.asJava)
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+      .initPruned(r, fileSchema, requested, reader, keep, totalRows)
     r
   }
 
@@ -481,9 +507,7 @@ object LakeParquet {
     dataFileOpens.incrementAndGet()
     val reader = openFooter(file)
     try {
-      val footer = reader.getFooter
-      val fileSchema = footer.getFileMetaData.getSchema
-      val blocks = footer.getBlocks.asScala.toSeq
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val probeCols: Set[String] = preds.iterator
         .flatMap(_.references().iterator.map(_.fieldNames.head)).toSet
       val pointProbes = LakeBloomProbe.probesOf(preds, probeCols)
@@ -508,17 +532,7 @@ object LakeParquet {
       rowGroupsRead.addAndGet(keep.count(identity))
       rowGroupsPruned.addAndGet(keep.length - keep.count(identity))
       if (!keep.exists(identity)) { reader.close(); return None }
-      val requested = org.apache.parquet.schema.Types.buildMessage()
-        .addFields(columns.map(c =>
-          (fileSchema: org.apache.parquet.schema.GroupType).getType(c)): _*)
-        .named("spark_schema")
-      // the FILE reader's requested schema is what bounds page IO to
-      // the projected columns; the decoder's copy rides initPruned
-      reader.setRequestedSchema(requested)
-      val totalRows = blocks.zip(keep).collect { case (b, true) => b.getRowCount }.sum
-      val r = new VectorizedParquetRecordReader(false, 4096)
-      org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
-        .initPruned(r, fileSchema, requested, reader, keep, totalRows)
+      val r = vectorized(reader, columns, keep)
       val spans = Seq.newBuilder[(Long, Long)]
       var off = 0L
       blocks.zip(keep).foreach { case (b, k) =>

@@ -139,6 +139,21 @@ class GraftLakeSpec extends AnyFunSuite {
       s"unmatched files must not be rewritten: before=$before after=$after")
   }
 
+  test("MERGE INTO … USING a temp view over a DataFrame that reads a lake table") {
+    // the view keeps a table reference that the MERGE's group filter
+    // copies; planning it used to fail with "No plan for TableReference"
+    spark.sql("CREATE TABLE lake.db.t_mview_src (k STRING, v DOUBLE)")
+    spark.sql("CREATE TABLE lake.db.t_mview_tgt (k STRING, v DOUBLE)")
+    spark.sql("INSERT INTO lake.db.t_mview_src VALUES ('a', 1.0), ('b', 2.0)")
+    spark.sql("INSERT INTO lake.db.t_mview_tgt VALUES ('a', 0.0), ('c', 3.0)")
+    spark.table("lake.db.t_mview_src").createOrReplaceTempView("t_mview_view")
+    spark.sql("""MERGE INTO lake.db.t_mview_tgt t USING t_mview_view s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    val got = spark.table("lake.db.t_mview_tgt").collect()
+      .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
+    assert(got == Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)))
+  }
+
   test("stats-based file skipping: scan plans only files whose range can match") {
     val t = seeded("t_skip")
     val df = spark.table(s"lake.db.$t").filter(col("id") >= 80L)
