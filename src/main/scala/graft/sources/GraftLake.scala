@@ -72,7 +72,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     [[SupportsRuntimeV2Filtering]] on `_file`, so Spark's runtime
   *     group filtering first finds WHICH files contain matches and the
   *     rewrite touches only those — at 100 TB an UPDATE of one key
-  *     rewrites one file, not the table.
+  *     rewrites one file, not the table. A MERGE whose target scan
+  *     plans at most one file skips that filter (see
+  *     `LakeScan.filterAttributes`).
   */
 /** CHECK-constraint persistence: one `constraint.<name>` table property
   * per constraint, JSON {sql, enforced, rely, validated}. Spark 4.1's
@@ -3518,7 +3520,8 @@ class LakeRowLevelOperation(dir: Path, snapshot: LakeSnapshot,
     Array(Expressions.column(LakeTable.FileColumn))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeScanBuilder(dir, snapshot, onPlanned = Some(files => scannedFiles = files))
+    new LakeScanBuilder(dir, snapshot, onPlanned = Some(files => scannedFiles = files),
+      command = Some(cmd))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -3936,7 +3939,9 @@ object LakeStats {
 
 class LakeScanBuilder(dir: Path, snapshot: LakeSnapshot,
     onPlanned: Option[Seq[String] => Unit],
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+    // the copy-on-write operation this scan reads for, if any
+    command: Option[RowLevelOperation.Command] = None)
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownV2Filters with SupportsPushDownAggregates
   with SupportsPushDownLimit {
@@ -4429,7 +4434,7 @@ class LakeScanBuilder(dir: Path, snapshot: LakeSnapshot,
         // predicate decided All on every kept file, so every row group
         // in them matches too — nothing to skip
         rgPreds = skips.filterNot(p => consumed.exists(_ eq p)),
-        eqdels = snapshot.eqdels)
+        eqdels = snapshot.eqdels, command = command)
     }
 
   /** Point-lookup BLOOM pruning (table property `bloomBy`): after
@@ -4560,7 +4565,8 @@ class LakeScan(dir: Path, tableSchema: StructType, props: Map[String, String],
     rgPreds: Array[VPredicate] = Array.empty,
     // live EQUALITY-DELETE records of the scanned snapshot: readers
     // anti-join each file against every record born after the file
-    eqdels: Seq[LakeEqDelete] = Seq.empty)
+    eqdels: Seq[LakeEqDelete] = Seq.empty,
+    command: Option[RowLevelOperation.Command] = None)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeV2Filtering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -4638,7 +4644,13 @@ class LakeScan(dir: Path, tableSchema: StructType, props: Map[String, String],
     *
     *   - row-level ops (`onPlanned` set): Spark first finds which
     *     `_file`s contain matching rows, then hands them back as an IN
-    *     predicate — only those files are re-read and rewritten;
+    *     predicate — only those files are re-read and rewritten. A
+    *     copy-on-write MERGE that plans at most one file reports no
+    *     attribute, so Spark plans no such filter: for MERGE the filter
+    *     evaluates the source and scans the target a second time, and
+    *     over one file it could only decide whether to rewrite it. A
+    *     MERGE matching nothing in that file therefore rewrites it.
+    *     UPDATE and DELETE keep the filter (it scans only the target);
     *   - plain scans of a PARTITIONED table: the identity partition
     *     source columns are filterable, so a selective dimension join
     *     prunes whole partitions at RUNTIME (the dynamic-partition-
@@ -4665,7 +4677,9 @@ class LakeScan(dir: Path, tableSchema: StructType, props: Map[String, String],
       case LakePartitioning.Identity(c) => c }
 
   override def filterAttributes(): Array[NamedReference] =
-    if (onPlanned.isDefined) Array(Expressions.column(LakeTable.FileColumn))
+    if (onPlanned.isDefined)
+      if (command.contains(RowLevelOperation.Command.MERGE) && files.size <= 1) Array.empty
+      else Array(Expressions.column(LakeTable.FileColumn))
     // only columns the scan OUTPUTS: Spark's PartitionPruning resolves
     // every reported attribute against the scan's output — one pruned-
     // away layout column would fail ANALYSIS of any join on the table

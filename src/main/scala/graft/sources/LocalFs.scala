@@ -5,14 +5,15 @@ import java.nio.file.{Files, Path => NioPath}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's raw local filesystem with permission changes made by a
-  * chmod(2) syscall instead of a forked `chmod` process.
+  * chmod(2) syscall instead of a forked `chmod` process, and link
+  * status answered without a forked `readlink` process.
   *
   * Without the native Hadoop library (`libhadoop.so`), Hadoop's
   * `setPermission` runs `chmod` as a child process, and its `create`
@@ -24,12 +25,23 @@ import org.apache.hadoop.io.nativeio.NativeIO
   * four-digit mode keeps it, chmod(2) would clear it), and on a
   * filesystem without POSIX permissions. So every mode stays what
   * `chmod` would set.
+  *
+  * Hadoop's `getFileLinkStatus` runs `readlink` on every call, with or
+  * without the native library; `FileContext.rename` (every streaming
+  * checkpoint and state-store file) asks it for both of its paths. For
+  * a path that is not a symbolic link its answer is `getFileStatus`,
+  * so that is what this override gives; only a real link goes to
+  * Hadoop.
   */
 class GraftRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
     if (NativeIO.isAvailable || permission.getStickyBit ||
         !GraftRawLocalFileSystem.chmod(pathToFile(p).toPath, permission))
       super.setPermission(p, permission)
+
+  override def getFileLinkStatus(p: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(p).toPath)) super.getFileLinkStatus(p)
+    else getFileStatus(p)
 }
 
 object GraftRawLocalFileSystem {
@@ -57,7 +69,8 @@ class GraftLocalFileSystem extends LocalFileSystem(new GraftRawLocalFileSystem)
 /** `fs.AbstractFileSystem.file.impl` for graft sessions: the
   * `FileContext` side (streaming checkpoints and state stores), which
   * otherwise builds Hadoop's `RawLocalFileSystem` itself. The overrides
-  * are those of Hadoop's `RawLocalFs`. */
+  * are those of Hadoop's `RawLocalFs`; link status reaches
+  * [[GraftRawLocalFileSystem]] through `DelegateToFileSystem`. */
 class GraftRawLocalFs(uri: URI, conf: Configuration)
     extends DelegateToFileSystem(uri, new GraftRawLocalFileSystem, conf,
       FsConstants.LOCAL_FS_URI.getScheme, false) {

@@ -117,25 +117,38 @@ class GraftLakeSpec extends AnyFunSuite {
       (0L until 100L).filter(_ != 77L).map(i => (i, i * 10L, s"f${i / 25}")))
   }
 
+  /** The executed plan of a row-level command, the command's own
+    * physical plan included. */
+  private def commandPlan(sql: String): String =
+    spark.sql(sql).queryExecution.executedPlan.treeString(verbose = true)
+
+  /** A runtime `_file` group filter in a plan: the subquery Spark's
+    * runtime group filtering adds to a copy-on-write target scan. */
+  private def hasFileGroupFilter(plan: String): Boolean =
+    plan.linesIterator.exists(l => l.contains("dynamicpruningexpression(_file"))
+
   test("MERGE INTO: upsert updates matched rows in place and appends new ones") {
     import spark.implicits._
     val t = seeded("t_merge")
     val before = filePaths(t)
+    val f23 = spark.table(s"lake.db.$t").where($"s".isin("f2", "f3"))
+      .select("_file").distinct().as[String].collect().toSet
     Seq((10L, -1L, "upd"), (40L, -2L, "upd"), (200L, -3L, "new"))
       .toDF("id", "v", "s").createOrReplaceTempView("merge_src")
-    spark.sql(
+    val plan = commandPlan(
       s"""MERGE INTO lake.db.$t t USING merge_src s ON t.id = s.id
          |WHEN MATCHED THEN UPDATE SET t.v = s.v
          |WHEN NOT MATCHED THEN INSERT (id, v, s) VALUES (s.id, s.v, s.s)""".stripMargin)
+    assert(hasFileGroupFilter(plan), s"a multi-file MERGE keeps its group filter:\n$plan")
     val got = rows(t)
     assert(got.size == 101)
     assert(got.find(_._1 == 10L).get == ((10L, -1L, "f0")))
     assert(got.find(_._1 == 40L).get == ((40L, -2L, "f1")))
     assert(got.find(_._1 == 200L).get == ((200L, -3L, "new")))
     assert(got.find(_._1 == 60L).get == ((60L, 600L, "f2")))
-    // files f2/f3 hold no matched ids: their paths survive the merge
+    // files f2/f3 hold no matched ids: exactly their paths survive the merge
     val after = filePaths(t)
-    assert(after.filter(before.contains).size >= 2,
+    assert(f23.size == 2 && after.filter(before.contains).toSet == f23,
       s"unmatched files must not be rewritten: before=$before after=$after")
   }
 
@@ -145,13 +158,97 @@ class GraftLakeSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE lake.db.t_mview_src (k STRING, v DOUBLE)")
     spark.sql("CREATE TABLE lake.db.t_mview_tgt (k STRING, v DOUBLE)")
     spark.sql("INSERT INTO lake.db.t_mview_src VALUES ('a', 1.0), ('b', 2.0)")
-    spark.sql("INSERT INTO lake.db.t_mview_tgt VALUES ('a', 0.0), ('c', 3.0)")
+    // two target files: a one-file MERGE target plans no group filter
+    spark.sql("INSERT INTO lake.db.t_mview_tgt VALUES ('a', 0.0)")
+    spark.sql("INSERT INTO lake.db.t_mview_tgt VALUES ('c', 3.0)")
     spark.table("lake.db.t_mview_src").createOrReplaceTempView("t_mview_view")
-    spark.sql("""MERGE INTO lake.db.t_mview_tgt t USING t_mview_view s ON t.k = s.k
+    val plan = commandPlan("""MERGE INTO lake.db.t_mview_tgt t USING t_mview_view s ON t.k = s.k
       WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    assert(hasFileGroupFilter(plan), plan)
     val got = spark.table("lake.db.t_mview_tgt").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
     assert(got == Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)))
+  }
+
+  test("copy-on-write MERGE into a one-file table plans no runtime _file filter") {
+    import spark.implicits._
+    spark.sql("CREATE TABLE lake.db.t_merge1 (id BIGINT, v BIGINT, s STRING)")
+    spark.range(0, 50).select($"id", ($"id" * 10L).as("v"), lit("f").as("s"))
+      .coalesce(1).writeTo("lake.db.t_merge1").append()
+    assert(filePaths("t_merge1").size == 1)
+    val v0 = LakeLog.currentSnapshot(tableDir("t_merge1")).get.version
+    Seq((10L, -1L, "upd"), (200L, -3L, "new"))
+      .toDF("id", "v", "s").createOrReplaceTempView("merge1_src")
+    val plan = commandPlan(
+      """MERGE INTO lake.db.t_merge1 t USING merge1_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v
+        |WHEN NOT MATCHED THEN INSERT (id, v, s) VALUES (s.id, s.v, s.s)""".stripMargin)
+    assert(plan.contains("ReplaceData") && !hasFileGroupFilter(plan),
+      s"a one-file MERGE target needs no group filter:\n$plan")
+    assert(rows("t_merge1") == ((0L until 50L).map(i =>
+      if (i == 10L) (i, -1L, "f") else (i, i * 10L, "f")) :+ ((200L, -3L, "new"))))
+    assert(LakeLog.currentSnapshot(tableDir("t_merge1")).get.version == v0 + 1)
+  }
+
+  test("UPDATE and DELETE matching nothing in a one-file table keep its path") {
+    import spark.implicits._
+    spark.sql("CREATE TABLE lake.db.t_nomatch1 (id BIGINT, v BIGINT, s STRING)")
+    spark.range(0, 50).select($"id", ($"id" * 10L).as("v"), lit("f").as("s"))
+      .coalesce(1).writeTo("lake.db.t_nomatch1").append()
+    val before = filePaths("t_nomatch1")
+    // v - id = 9 * id is never 1; the predicate is not pushable, so
+    // neither command can take the metadata-only path
+    val upd = commandPlan("UPDATE lake.db.t_nomatch1 SET v = 0 WHERE v - id = 1")
+    assert(hasFileGroupFilter(upd), s"UPDATE keeps its group filter:\n$upd")
+    assert(filePaths("t_nomatch1") == before)
+    val del = commandPlan("DELETE FROM lake.db.t_nomatch1 WHERE v - id = 1")
+    assert(hasFileGroupFilter(del), s"DELETE keeps its group filter:\n$del")
+    assert(filePaths("t_nomatch1") == before)
+    assert(rows("t_nomatch1") == (0L until 50L).map(i => (i, i * 10L, "f")))
+  }
+
+  test("lake reads decode like spark.read.parquet of the same files: every column type, full and row-group-pruned") {
+    import spark.implicits._
+    import graft.sources.LakeParquet
+    // one multi-row-group file sorted by l, nulls in every column,
+    // then a column added and one widened after it was written
+    spark.sql("CREATE TABLE lake.db.t_decode (i INT, l BIGINT, d DOUBLE, s STRING, b BOOLEAN) " +
+      "TBLPROPERTIES ('sortBy' = 'l', 'row_group_bytes' = '8192')")
+    def nullEvery(n: Int, c: org.apache.spark.sql.Column) = when($"id" % n =!= 0, c)
+    spark.range(0, 20000).select(
+      nullEvery(7, ($"id" % 1000).cast("int")).as("i"), $"id".as("l"),
+      nullEvery(5, $"id" / 3.0).as("d"), nullEvery(3, concat(lit("s"), $"id".cast("string"))).as("s"),
+      nullEvery(11, $"id" % 2 === 0).as("b"))
+      .coalesce(1).writeTo("lake.db.t_decode").append()
+    val old = filePaths("t_decode")
+    spark.sql("ALTER TABLE lake.db.t_decode ADD COLUMNS (x STRING)")
+    spark.sql("ALTER TABLE lake.db.t_decode ALTER COLUMN i TYPE BIGINT")
+    spark.range(20000, 26000).select(
+      nullEvery(7, $"id" * 100000L).as("i"), $"id".as("l"), nullEvery(5, $"id" / 3.0).as("d"),
+      nullEvery(3, concat(lit("s"), $"id".cast("string"))).as("s"),
+      nullEvery(11, $"id" % 2 === 0).as("b"), nullEvery(2, $"id".cast("string")).as("x"))
+      .coalesce(1).writeTo("lake.db.t_decode").append()
+    val added = filePaths("t_decode").filterNot(old.contains)
+    assert(old.size == 1 && added.size == 1)
+    def pq(f: String) = spark.read.parquet(tableDir("t_decode").resolve(f).toString)
+    val expected = pq(old.head).select($"i".cast("bigint").as("i"), $"l", $"d", $"s", $"b",
+      lit(null).cast("string").as("x"))
+      .unionByName(pq(added.head).select("i", "l", "d", "s", "b", "x"))
+    assert(pq(old.head).schema("i").dataType == org.apache.spark.sql.types.IntegerType && pq(old.head).count() == 20000L)
+    def same(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame): Unit = {
+      assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+      val (g, w) = (got.collect().map(_.toSeq).toSeq, want.collect().map(_.toSeq).toSeq)
+      def key(r: Seq[Any]) = r(1).asInstanceOf[Long]
+      assert(g.sortBy(key) == w.sortBy(key), "lake rows differ from spark.read.parquet's")
+    }
+    same(spark.table("lake.db.t_decode"), expected)
+    // a residual predicate on the sorted column prunes row groups of the
+    // first file: the same rows must come out of the pruned open
+    val (r0, p0) = (LakeParquet.rowGroupsRead.get, LakeParquet.rowGroupsPruned.get)
+    same(spark.table("lake.db.t_decode").where($"l" >= 17000L && $"l" < 23000L),
+      expected.where($"l" >= 17000L && $"l" < 23000L))
+    assert(LakeParquet.rowGroupsRead.get > r0 && LakeParquet.rowGroupsPruned.get > p0,
+      "the predicate must reach the row-group-pruned open")
   }
 
   test("stats-based file skipping: scan plans only files whose range can match") {

@@ -1,13 +1,13 @@
 package graft
 
 import java.net.URI
-import java.nio.file.{Files, Path => NioPath}
+import java.nio.file.{Files, Path => NioPath, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,12 +17,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.LoopPar
 import graft.sources.{GraftLocalFileSystem, GraftLocalFs}
 
-/** Graft sessions write the local filesystem without forking `chmod`.
-  * Without the native Hadoop library, Hadoop's local filesystem starts
-  * a `chmod` child process for every file, checksum file and directory
-  * it creates; `GraftSession` swaps in `GraftLocalFileSystem` (Spark's
+/** Graft sessions write the local filesystem without forking `chmod`
+  * or `readlink`. Without the native Hadoop library, Hadoop's local
+  * filesystem starts a `chmod` child process for every file, checksum
+  * file and directory it creates, and with or without it a `readlink`
+  * process for every link-status lookup (`FileContext.rename` makes
+  * two); `GraftSession` swaps in `GraftLocalFileSystem` (Spark's
   * file-source writes) and `GraftLocalFs` (`FileContext`: streaming
-  * checkpoints and state stores), which set the same modes by syscall.
+  * checkpoints and state stores), which set the same modes by syscall
+  * and answer a path that is no link without a process.
   */
 class LocalFsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local("local-fs-spec")
@@ -35,14 +38,14 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("a 108-partition write from one task starts no chmod process") {
     val dir = Files.createTempDirectory("localfs-write").toString
-    val forks = chmods(dir) {
+    val forks = LocalFsSpec.forks(dir, "chmod") {
       partitioned.coalesce(1).write.partitionBy("p", "y", "m").parquet(s"$dir/graft")
     }
     assert(new java.io.File(s"$dir/graft/p=2/y=2/m=11").isDirectory)
     assert(forks.isEmpty, s"${forks.size} chmod processes, first: ${forks.headOption}")
     // the probe sees the forks Hadoop's own local filesystem makes here
     if (!NativeIO.isAvailable) {
-      val stock = chmods(dir) {
+      val stock = LocalFsSpec.forks(dir, "chmod") {
         partitioned.coalesce(1).write.options(localFsImpl(classOf[org.apache.hadoop.fs.LocalFileSystem], "022"))
           .partitionBy("p", "y", "m").parquet(s"$dir/stock")
       }
@@ -100,7 +103,7 @@ class LocalFsSpec extends AnyFunSuite {
     val in = Files.createDirectories(dir.resolve("in"))
     for (i <- 0 until 3)
       Files.write(in.resolve(s"part-$i.json"), (0 until 10).map(j => s"""{"k":${(i + j) % 4}}""").asJava)
-    val forks = chmods(dir.toString) {
+    val forks = LocalFsSpec.forks(dir.toString, "chmod", "readlink") {
       LoopPar.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
         val q = spark.readStream.schema("k INT").option("maxFilesPerTrigger", "1")
           .json(in.toString).groupBy("k").count()
@@ -112,14 +115,39 @@ class LocalFsSpec extends AnyFunSuite {
       }
     }
     assert(spark.table("localfs_counts").orderBy("k").collect().map(_.getLong(1)).toSeq == Seq(7, 8, 8, 7))
-    assert(forks.isEmpty, s"${forks.size} chmod processes, first: ${forks.headOption}")
+    assert(forks.isEmpty, s"${forks.size} chmod or readlink processes, first: ${forks.headOption}")
+  }
+
+  test("link status: a plain path answers without readlink, a symlink still reports its target") {
+    val dir = Files.createTempDirectory("localfs-link")
+    val target = Files.write(dir.resolve("target"), Array[Byte](1, 2, 3))
+    val link = Files.createSymbolicLink(dir.resolve("link"), target)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.newInstance(new URI("file:///"), conf)
+    val fc = FileContext.getFileContext(new URI("file:///"), conf)
+    try {
+      val forks = LocalFsSpec.forks(dir.toString, "readlink") {
+        for (p <- Seq(new Path(target.toString), new Path(target.toUri))) {
+          for (st <- Seq(fs.getFileLinkStatus(p), fc.getFileLinkStatus(p)))
+            assert(!st.isSymlink && st.isFile && st.getLen == 3L, s"$p: $st")
+        }
+        intercept[java.io.FileNotFoundException](fs.getFileLinkStatus(new Path(dir.resolve("none").toUri)))
+      }
+      assert(forks.isEmpty, s"${forks.size} readlink processes, first: ${forks.headOption}")
+      val p = new Path(link.toString)
+      for (st <- Seq(fs.getFileLinkStatus(p), fc.getFileLinkStatus(p))) {
+        assert(st.isSymlink, s"$p: $st")
+        assert(Paths.get(st.getSymlink.toUri.getPath) == target, s"$p: $st")
+      }
+    } finally fs.close()
   }
 }
 
 object LocalFsSpec {
-  /** Command lines of the `chmod` processes this JVM starts in `body`
-    * that name a path under `under`, from a JFR `jdk.ProcessStart` recording. */
-  def chmods(under: String)(body: => Unit): Seq[String] = {
+  /** Command lines of the processes running any of `commands` that this
+    * JVM starts in `body` and that name a path under `under`, from a JFR
+    * `jdk.ProcessStart` recording. */
+  def forks(under: String, commands: String*)(body: => Unit): Seq[String] = {
     val rec = new Recording()
     val file = Files.createTempFile("process-start", ".jfr")
     try {
@@ -130,7 +158,7 @@ object LocalFsSpec {
       RecordingFile.readAllEvents(file).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
         .map(_.getString("command"))
-        .filter(c => c.startsWith("chmod ") && c.contains(under))
+        .filter(c => commands.exists(p => c.startsWith(p + " ")) && c.contains(under))
     } finally { rec.close(); Files.delete(file) }
   }
 
